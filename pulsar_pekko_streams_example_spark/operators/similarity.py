@@ -252,9 +252,11 @@ def _pair_cosines(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     Per pair, in the JVM/DuckDB twin order exactly:
     - either side has a NULL element, or lengths differ (zip_with NULL-pads)
       → cosine NULL (NaN in the output buffer → Arrow null);
-    - else dot = dimension-ordered left fold (one fused multiply-add per
-      dimension over the batch — same IEEE op sequence as the zip_with
-      aggregate, so doubles are bit-identical);
+    - else dot = dimension-ordered left fold, one multiply then one add
+      per dimension over the batch.  The two are deliberately NOT fused:
+      a fused multiply-add rounds once where the JVM's zip_with aggregate
+      rounds twice, so only the unfused sequence keeps the doubles
+      bit-identical;
     - prod = na * nb (the JVM-computed norms ride in, so the product is the
       same double); prod == 0 → -1; NaN quotient → -1 (nanvl twin); ±Inf
       survives."""

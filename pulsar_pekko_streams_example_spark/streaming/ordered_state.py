@@ -25,18 +25,18 @@ Hostile-input contract (round-8 streaming sweep):
   pandas as float64 + NaN; without the explicit guard ``int(NaN)`` raises
   and KILLS the whole streaming query — one poisoned message must not take
   down the consumer.)  Positionless rows sort after positioned ones within
-  a batch (pandas ``na_position='last'``).
+  a batch.
 - NULL ``key``: forms its own serial group (Spark groups NULL keys
   together), so ordering among the keyless messages is still serial —
   mirroring a broker routing empty-keyed messages to one consumer.
 - NULL ``attempt`` sorts last among same-seq duplicates and is otherwise
   inert (only ``seq`` drives the cursor).
 
-The per-row cursor pass is VECTORIZED (round-10): the group is sorted by
-(seq, attempt), so the cursor before each row is ``max(initial, previous
-row's seq)`` and redelivery/in-order reduce to shifted-cummax arithmetic —
-no ``itertuples`` loop in the ordered path's hot loop (it was the path's
-throughput ceiling at ~300k msg/s).
+The per-row cursor pass is VECTORIZED in plain numpy: the group is sorted
+by (seq, attempt) with ``np.lexsort``, so the cursor before each row is a
+shifted running max and redelivery/in-order reduce to array comparisons —
+no per-row Python loop and no pandas sort or nullable-integer arithmetic in
+the per-key call, whose fixed cost is paid once per key per micro-batch.
 """
 
 from __future__ import annotations
@@ -80,6 +80,20 @@ STATE_SCHEMA = "last_seq LONG, processed LONG"
 STATE_SCHEMA_TTL = "last_seq LONG, processed LONG, max_event_ms LONG"
 
 
+def _nullable_int64(col: pd.Series) -> Tuple[np.ndarray, np.ndarray]:
+    """(int64 values with NULLs as 0, NULL mask) of a nullable long column.
+
+    Arrow hands a null-free long column over as int64, used as is, so seq
+    arithmetic stays EXACT over the full long range (a float64 round-trip
+    collapses distinct seqs above 2^53); a null-bearing one arrives as
+    float64 + NaN."""
+    values = col.to_numpy()
+    if values.dtype.kind in "iu":
+        return values.astype(np.int64, copy=False), np.zeros(len(values), dtype=bool)
+    null = pd.isna(values)
+    return np.where(null, 0, values).astype(np.int64), null
+
+
 def _advance(
     key_val: Any,
     rows: pd.DataFrame,
@@ -88,59 +102,46 @@ def _advance(
     fresh: bool,
 ) -> Tuple[pd.DataFrame, int, int]:
     """One serial, ordered pass over a key's backlog — the mapZIOPar(1)
-    analog, vectorized.
+    analog, in plain numpy.
 
-    After sorting by (seq, attempt), the cursor in effect before row i is
-    ``max(last_seq, seq[i-1])``: any earlier non-redelivery advanced the
-    cursor to its seq, and sorting makes that the running max.  Hence
-    ``redelivery = seq <= cursor_before`` and the in-order test are plain
-    shifted-array arithmetic; the final cursor is ``max(last_seq,
-    nanmax(seq))``.  Semantics are pinned identical to the original
-    per-row loop by the hypothesis property
+    Rows are processed in (seq, attempt) order, NULLs last in each key and
+    ties in arrival order (``np.lexsort`` is stable).  The cursor in effect
+    before row i is then the running max of ``last_seq`` and the seqs
+    before it: any earlier non-redelivery advanced the cursor to its seq.
+    Hence ``redelivery = seq <= cursor_before`` and the in-order test are
+    plain shifted-array arithmetic; the final cursor is ``max(last_seq,
+    max positioned seq)``.  NULL seqs never move the cursor and never read
+    in order or as redeliveries.  Semantics are pinned identical to the
+    original per-row loop by the hypothesis property
     ``tests/test_properties.py::test_ordered_cursor_invariants_under_arbitrary_batches``.
     """
-    rows = rows.sort_values(["seq", "attempt"], kind="mergesort").reset_index(drop=True)
     n = len(rows)
-    if n == 0:
-        empty = pd.DataFrame(
-            {
-                "key": pd.Series(dtype=object),
-                "message_id": pd.Series(dtype=object),
-                "seq": pd.Series(dtype="Int64"),
-                "processing_index": pd.Series(dtype="int64"),
-                "is_redelivery": pd.Series(dtype=bool),
-                "in_order": pd.Series(dtype=bool),
-                "fresh_cursor": pd.Series(dtype=bool),
-            }
-        )
-        return empty, last_seq, processed
-
-    # Nullable Int64 keeps seq arithmetic EXACT over the full long range: a
-    # float64 detour would collapse distinct seqs above 2^53 (the Arrow
-    # transfer itself only degrades to float64 when the batch carries
-    # NULLs, so the common all-positioned batch must stay integer-exact,
-    # matching the per-row loop this replaces).
-    seq = rows["seq"].astype("Int64")
-    positioned = seq.notna()
-    cursor_before = seq.shift(1).fillna(last_seq).clip(lower=last_seq)
-    redelivery = ((seq <= cursor_before) & positioned).fillna(False)
-    in_order = (
-        (redelivery | (seq == cursor_before + 1) | (cursor_before == -1))
-        & positioned
-    ).fillna(False)
+    seq, seq_null = _nullable_int64(rows["seq"])
+    attempt, attempt_null = _nullable_int64(rows["attempt"])
+    order = np.lexsort((attempt, attempt_null, seq, seq_null))
+    seq, positioned = seq[order], ~seq_null[order]
+    # the cursor before each row: running max over the positioned seqs
+    # processed before it, floored at the carried cursor
+    prev = np.full(n, last_seq, dtype=np.int64)
+    prev[1:] = np.where(positioned[:-1], seq[:-1], last_seq)
+    cursor_before = np.maximum.accumulate(prev)
+    redelivery = positioned & (seq <= cursor_before)
+    in_order = positioned & (
+        redelivery | (seq == cursor_before + 1) | (cursor_before == -1)
+    )
     out = pd.DataFrame(
         {
             "key": np.full(n, key_val, dtype=object),
-            "message_id": rows["message_id"].to_numpy(),
-            "seq": seq,
-            "processing_index": np.arange(processed, processed + n, dtype="int64"),
-            "is_redelivery": redelivery.to_numpy(dtype=bool),
-            "in_order": in_order.to_numpy(dtype=bool),
+            "message_id": rows["message_id"].to_numpy()[order],
+            "seq": pd.arrays.IntegerArray(seq, ~positioned),
+            "processing_index": np.arange(processed, processed + n, dtype=np.int64),
+            "is_redelivery": redelivery,
+            "in_order": in_order,
             "fresh_cursor": np.full(n, bool(fresh)),
         }
     )
     if positioned.any():
-        last_seq = int(max(last_seq, seq.max()))
+        last_seq = max(last_seq, int(seq[positioned].max()))
     return out, last_seq, processed + n
 
 

@@ -13,20 +13,23 @@ Spark has no broker nack; the idiomatic replacement is delivery-state-as-data:
   ``attempt + 1``; a re-ingestion pass filters ``available_at <= now``
 - rows exceeding ``max_attempts`` → the DLQ table
 
-Everything is a plain DataFrame write inside ``foreachBatch`` (streaming) or
-a direct call (batch) — idempotent, checkpointable, and at scale the retry
-table is tiny relative to the main stream (≤ failure rate × traffic).
+A micro-batch is ONE Spark job inside ``foreachBatch`` (streaming) or a
+direct call (batch): one write partitioned by outcome, whose ``Observation``
+gives the counters, then one rename per outcome into its ledger —
+idempotent, checkpointable, and at scale the retry table is tiny relative
+to the main stream (≤ failure rate × traffic).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import threading
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 #: Columns every retry-ledger row carries regardless of envelope payload —
@@ -50,6 +53,11 @@ FRONTIER_SCHEMA = (
 
 #: target size of one consolidated archive file written by the sink fold
 _ARCHIVE_TARGET_BYTES = 1 << 30  # ~1 GiB
+
+
+def _quote(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _archive_file_count(archived_bytes: int) -> int:
@@ -84,14 +92,23 @@ class RetryRouter:
     lease_timeout_s: float = 60.0
     #: live in-process delivery counters (the reference's success/error/
     #: retry counter gauges, ``util/MetricsCollector.scala``): incremented
-    #: by every ``route_batch`` from the SAME aggregate pass that gates the
-    #: ledger writes, so they cost no extra job.  THIS process's view only —
-    #: a driver restart resets them; the ledgers are the durable truth
-    #: (``status()`` reports both side by side).
+    #: by every ``route_batch`` once its batch has landed, from an
+    #: ``Observation`` on the routing write itself, so they cost no extra
+    #: job.  THIS process's view only — a restart resets them; the ledgers
+    #: are the durable truth (``status()`` reports both side by side).
     counters: dict = field(
         default_factory=lambda: {
             "batches": 0, "acks": 0, "retries": 0, "dlq": 0, "resolved": 0,
         },
+        repr=False,
+        compare=False,
+    )
+    #: cumulative ``perf_counter`` ms of ``route_batch``'s phases over
+    #: ``calls`` landed batches (lease wait + heal, write, land); no job
+    route_timings: dict = field(
+        default_factory=lambda: dict.fromkeys(
+            ("calls", "lease_wait_ms", "write_ms", "land_ms"), 0
+        ),
         repr=False,
         compare=False,
     )
@@ -104,6 +121,23 @@ class RetryRouter:
 
     def _lease_path(self) -> str:
         return self.retry_path + ".lease"
+
+    def _open_lease(self) -> int:
+        """A new descriptor on the lease file, created on first use."""
+        parent = os.path.dirname(self._lease_path())
+        if parent:
+            os.makedirs(parent, exist_ok=True)
+        return os.open(self._lease_path(), os.O_CREAT | os.O_RDWR)
+
+    def _lease_record(self) -> str | None:
+        """The latest holder's record — diagnostic content, not held-ness."""
+        try:
+            with open(self._lease_path()) as f:
+                return f.read() or None
+        except FileNotFoundError:
+            return None
+        except OSError:
+            return "<unreadable>"
 
     @staticmethod
     def _flock_nb_retry(fd: int, deadline: float) -> bool:
@@ -149,21 +183,13 @@ class RetryRouter:
         a real lock service, same as it needs atomic object-store
         renames)."""
         path = self._lease_path()
-        parent = os.path.dirname(path)
-        if parent:
-            os.makedirs(parent, exist_ok=True)
-        fd = os.open(path, os.O_CREAT | os.O_RDWR)
+        fd = self._open_lease()
         try:
             if not self._flock_nb_retry(
                 fd, time.monotonic() + self.lease_timeout_s
             ):
-                try:
-                    with open(path) as f:
-                        holder = f.read()
-                except OSError:
-                    holder = "<unreadable>"
                 raise TimeoutError(
-                    f"ledger lease {path} still held by [{holder}] "
+                    f"ledger lease {path} still held by [{self._lease_record()}] "
                     f"after {self.lease_timeout_s}s while acquiring "
                     f"for {op!r}; the holder is ALIVE (a crashed "
                     "holder's lock is released by the kernel)"
@@ -180,32 +206,13 @@ class RetryRouter:
         finally:
             os.close(fd)  # releases the flock; the file stays as a record
 
-    def _write(self, df: DataFrame, path: str, batch_id: int) -> None:
-        """Idempotent micro-batch write: partition by batch id with dynamic
-        overwrite, so a REPLAYED batch (crash between sink write and offset
-        commit) overwrites its own partition instead of duplicating —
-        foreachBatch's at-least-once becomes effectively-once.
-
-        The non-idempotent path stamps ``_batch_id`` too (as a plain data
-        column): ``FRONTIER_SCHEMA`` declares the column, so the populated
-        frontier must carry it in BOTH layouts or a downstream
-        ``select("_batch_id")`` would work only on the empty path
-        (round-10 advice)."""
-        if self.idempotent:
-            (
-                df.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(path)
-            )
-        else:
-            df.withColumn("_batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(path)
+    def _route_staging(self) -> str:
+        """``route_batch``'s staging directory, outside every ledger root;
+        between calls it exists only as crash debris."""
+        return self.retry_path + ".route"
 
     def route_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        """foreachBatch body: one call per micro-batch.
+        """foreachBatch body: one call per micro-batch, one Spark job.
 
         NULL-safe delivery accounting (round-8 streaming sweep): a naive
         ``filter(ok)`` / ``filter(~ok)`` split LOSES rows whose ``ok`` is
@@ -217,73 +224,111 @@ class RetryRouter:
         message still gets its full retry budget instead of skipping both
         the retry and DLQ filters.  Invariant: every input row lands in
         exactly one of sink / retry / DLQ."""
+        t0 = time.perf_counter()
         with self._lease("route_batch"):
-            self._route_batch_locked(batch, batch_id)
+            self._route_batch_locked(batch, batch_id, t0)
 
-    def _route_batch_locked(self, batch: DataFrame, batch_id: int) -> None:
-        batch = self._with_surrogate_ids(batch).persist()
-        try:
-            ok = F.coalesce(F.col("ok"), F.lit(False))
-            att = F.coalesce(F.col("attempt"), F.lit(1))
-            # rows re-ingested from the retry ledger carry _redelivered=true
-            # (stamped by due_retries); requeue_dlq resets attempt to 1, so
-            # the counter alone cannot tell a revived redelivery from a
-            # first delivery
-            redelivered = (
-                F.coalesce(F.col("_redelivered"), F.lit(False))
-                if "_redelivered" in batch.columns
-                else F.lit(False)
-            )
-            acks, nacks = batch.filter(ok), batch.filter(~ok)
+    #: ``_outcome`` partition value → the counter it feeds
+    _OUTCOMES = {"sink": "acks", "resolved": "resolved", "retry": "retries", "dlq": "dlq"}
 
-            # ONE aggregate job decides which ledger writes run, instead of
-            # a limit(1).count() guard job per branch — per-micro-batch job
-            # overhead is the floor of the redelivery drain loop's wall, so
-            # the guards ride a single pass over the persisted batch
-            is_retry = ~ok & (att < F.lit(self.max_attempts))
-            n = batch.select(
-                F.count(F.when(ok, 1)).alias("acks"),
-                F.count(F.when(ok & ((att > 1) | redelivered), 1)).alias("resolved"),
-                F.count(F.when(is_retry, 1)).alias("retries"),
-                F.count(F.when(~ok & ~is_retry, 1)).alias("dlq"),
-            ).first()
-            with self._counters_lock:
-                self.counters["batches"] += 1
-                for k in ("acks", "retries", "dlq", "resolved"):
-                    self.counters[k] += n[k]
+    def _route_batch_locked(self, batch: DataFrame, batch_id: int, t0: float) -> None:
+        t1 = time.perf_counter()
+        cols = batch.columns
+        ok, att = "coalesce(ok, false)", "coalesce(attempt, 1)"
+        # rows re-ingested from the retry ledger carry _redelivered=true
+        # (stamped by due_retries); requeue_dlq resets attempt to 1, so
+        # the counter alone cannot tell a revived redelivery from a
+        # first delivery
+        redelivered = "coalesce(_redelivered, false)" if "_redelivered" in cols else "false"
+        retry = f"NOT {ok} AND {att} < {self.max_attempts}"
+        due = f"current_timestamp() + INTERVAL {self.redelivery_delay_s} SECONDS"
+        # an acked REDELIVERY also lands in the resolved index, which stops
+        # the frontier returning its superseded retry rows (bounded: only
+        # ids that failed once appear).  ``attempt > 1`` alone misses a
+        # requeued message acked on its first redelivery, hence the flag.
+        outcome = (
+            f"CASE WHEN {ok} AND ({att} > 1 OR {redelivered}) THEN array('sink', 'resolved') "
+            f"WHEN {ok} THEN array('sink') WHEN {retry} THEN array('retry') "
+            "ELSE array('dlq') END"
+        )
+        rewrite = {
+            "message_id": self._surrogate_id(cols),
+            "attempt": f"IF({retry}, {att} + 1, attempt)",
+            "available_at": f"IF({retry}, {due}, available_at)",
+        }
+        # ONE projection written as SQL: each DataFrame step and each py4j
+        # call (a Column-API function costs about 20) is paid per
+        # micro-batch.  ``_redelivered`` is transport metadata, not message
+        # state: dropped so ledger schemas stay batch-independent (no schema
+        # merge on read).  ``_batch_id`` is declared by FRONTIER_SCHEMA: a
+        # partition directory in the idempotent layout, a data column in
+        # the append layout.
+        rows = batch.selectExpr(
+            *(
+                f"{rewrite[c]} AS {_quote(c)}" if c in rewrite else _quote(c)
+                for c in cols
+                if c not in ("_redelivered", "_batch_id")
+            ),
+            *([] if "available_at" in cols else [f"IF({retry}, {due}, NULL) AS available_at"]),
+            f"explode({outcome}) AS _outcome",
+            f"{batch_id} AS _batch_id",
+        )
+        # the counters ride the write itself: no separate aggregate job
+        obs = Observation()
+        rows = rows.observe(
+            obs, *(F.expr(f"count_if(_outcome = '{k}')").alias(k) for k in self._OUTCOMES)
+        )
+        parts = ["_outcome", "_batch_id"] if self.idempotent else ["_outcome"]
+        staging = self._route_staging()
+        rows.write.mode("overwrite").partitionBy(*parts).parquet(staging)
+        n = obs.get
+        t2 = time.perf_counter()
+        self._land(staging, batch_id)
+        shutil.rmtree(staging, ignore_errors=True)
+        t3 = time.perf_counter()
+        with self._counters_lock:
+            self.counters["batches"] += 1
+            for k, counter in self._OUTCOMES.items():
+                self.counters[counter] += n[k]
+            timings = self.route_timings
+            timings["calls"] += 1
+            timings["lease_wait_ms"] += (t1 - t0) * 1000.0
+            timings["write_ms"] += (t2 - t1) * 1000.0
+            timings["land_ms"] += (t3 - t2) * 1000.0
 
-            # an acked REDELIVERY terminates its retry lifecycle: record it
-            # in the resolved index so the frontier stops returning the
-            # (append-only) superseded retry rows — pre-fix, a delivered
-            # message re-entered due_retries forever and every maintenance
-            # pass re-delivered it (at-least-once became unbounded, with a
-            # duplicate sink row per pass).  Bounded: only ids that failed
-            # at least once can appear here.  ``attempt > 1`` alone misses
-            # requeued messages acked on their FIRST redelivery (requeue
-            # resets the counter), hence the OR with the transport flag.
-            resolved = acks.filter((att > 1) | redelivered).select("message_id")
-            # the flag is transport metadata, not message state: drop it
-            # before every ledger write so sink/retry/DLQ schemas stay
-            # batch-independent (parquet directory reads do not schema-merge)
-            acks, nacks = acks.drop("_redelivered"), nacks.drop("_redelivered")
-            if n.acks:
-                self._write(acks, self.sink_path, batch_id)
-            if n.resolved:
-                self._write(resolved, self._resolved(), batch_id)
-
-            retry = nacks.filter(att < self.max_attempts).withColumn(
-                "attempt", att + F.lit(1)
-            ).withColumn(
-                "available_at",
-                F.current_timestamp() + F.expr(f"INTERVAL {self.redelivery_delay_s} SECONDS"),
-            )
-            if n.retries:
-                self._write(retry, self.retry_path, batch_id)
-
-            if n.dlq:
-                self._write(nacks.filter(att >= self.max_attempts), self.dlq_path, batch_id)
-        finally:
-            batch.unpersist()
+    def _land(self, staging: str, batch_id: int) -> None:
+        """Rename each staged outcome into its ledger: a missing ledger is
+        the outcome directory itself (never an empty, unreadable root);
+        otherwise ``_batch_id=N`` replaces the batch's old partition, which
+        moves into the staging first — a REPLAYED batch (crash before the
+        offset commit) replaces its own partitions instead of duplicating.
+        The append layout moves the part files (unique per write) instead.
+        A crash leaves only the staging as debris, which every lease holder
+        discards; the uncommitted batch then replays.  Same-filesystem
+        assumption as ``_swap_ledger``."""
+        # landing order: an ack lands before its resolved entry, so a crash
+        # between them can only redeliver, never drop, an acked message
+        roots = {
+            "sink": self.sink_path,
+            "resolved": self._resolved(),
+            "retry": self.retry_path,
+            "dlq": self.dlq_path,
+        }
+        part = f"_batch_id={batch_id}"
+        for outcome, root in roots.items():
+            src = os.path.join(staging, f"_outcome={outcome}")
+            if not os.path.isdir(src):
+                continue
+            if not os.path.exists(root):
+                os.rename(src, root)
+            elif self.idempotent:
+                dst = os.path.join(root, part)
+                if os.path.exists(dst):
+                    os.rename(dst, os.path.join(staging, f"replaced-{outcome}"))
+                os.rename(os.path.join(src, part), dst)
+            else:
+                for name in os.listdir(src):
+                    os.rename(os.path.join(src, name), os.path.join(root, name))
 
     # columns whose values change across delivery attempts of the SAME
     # message — excluded from the anonymous-message surrogate id below
@@ -292,8 +337,8 @@ class RetryRouter:
         "_redelivered",
     )
 
-    def _with_surrogate_ids(self, batch: DataFrame) -> DataFrame:
-        """Give NULL-``message_id`` rows a deterministic content-derived id.
+    def _surrogate_id(self, columns: list[str]) -> str:
+        """SQL for ``message_id`` with a deterministic content-derived id for NULLs.
 
         Message identity is load-bearing for the delivery ledger: the retry
         frontier windows on it and the DLQ exclusion anti-joins on it.  With
@@ -316,20 +361,11 @@ class RetryRouter:
         hashes EVERY attempt-stable column present in the batch (everything
         outside ``_MUTABLE``), so distinct broker identities yield distinct
         surrogates with no configuration."""
-        if "message_id" not in batch.columns:
-            return batch
-        stable = sorted(c for c in batch.columns if c not in self._MUTABLE)
-        content = (
-            F.to_json(F.struct(*[F.col(c) for c in stable]))
-            if stable
-            # no attempt-stable columns at all: nothing distinguishes the
-            # anonymous messages — one shared surrogate is the honest answer
-            else F.lit("")
-        )
-        surrogate = F.concat(F.lit("anon-"), F.sha2(content, 256))
-        return batch.withColumn(
-            "message_id", F.coalesce(F.col("message_id"), surrogate)
-        )
+        stable = sorted(c for c in columns if c not in self._MUTABLE)
+        # no attempt-stable columns at all: nothing distinguishes the
+        # anonymous messages — one shared surrogate is the honest answer
+        content = f"to_json(struct({', '.join(map(_quote, stable))}))" if stable else "''"
+        return f"coalesce(message_id, concat('anon-', sha2({content}, 256)))"
 
     def due_retries(
         self, spark: SparkSession, as_of=None, snapshot: bool = False
@@ -458,8 +494,9 @@ class RetryRouter:
         refuses is surfaced in ``debris_heal_errors`` rather than failing
         the poll — the one state that needs an operator) and the latest lease
         record (diagnostic only: content does not mean HELD, the flock
-        does), and this process's live ``counters`` (see the field doc —
-        in-process speed vs ledger-derived truth, side by side).
+        does), and this process's live ``counters`` and ``route_timings``
+        (see the field docs — in-process speed vs ledger-derived truth,
+        side by side).
 
         Every ledger counted by default is FAILURE-RATE-bounded, so the
         call stays cheap on a long deployment.  The sink is the full
@@ -491,12 +528,13 @@ class RetryRouter:
         ``maintenance_in_progress`` is the holder's lease RECORD, written
         just after acquisition — a status call racing that microsecond gap
         can surface the previous op's record (content is diagnostic, the
-        flock is the truth); and the in-process ``counters`` are returned
-        either way.  Reader-vs-reader contention (round-12): two concurrent
-        ``status()`` polls contend on this same flock, and status never
-        writes a holder record — so the loser would report the PREVIOUS
-        MUTATOR's record as ``maintenance_in_progress``, a false
-        "maintenance live" on a dashboard.  A status holder keeps the lock
+        flock is the truth); and the in-process ``counters`` and
+        ``route_timings`` are returned either way.  Reader-vs-reader
+        contention (round-12): two concurrent ``status()`` polls contend
+        on this same flock, and status never writes a holder record — so
+        the loser would report the PREVIOUS MUTATOR's record as
+        ``maintenance_in_progress``, a false "maintenance live" on a
+        dashboard.  A status holder keeps the lock
         only for the filesystem-cheap debris scan, so the try-lock is
         RETRIED briefly (50 ms attempts inside a ~0.25 s deadline) before
         returning the contended shape: reader-vs-reader contention
@@ -511,54 +549,32 @@ class RetryRouter:
                 return 0
             return spark.read.parquet(path).count()
 
-        def _lease_record() -> str | None:
-            if not os.path.exists(self._lease_path()):
-                return None
-            try:
-                with open(self._lease_path()) as f:
-                    return f.read() or None
-            except OSError:
-                return "<unreadable>"
-
         with self._counters_lock:
             counters = dict(self.counters)
-        parent = os.path.dirname(self._lease_path())
-        if parent:
-            os.makedirs(parent, exist_ok=True)
+            route_timings = dict(self.route_timings)
+        no_counts = dict.fromkeys(("retry_rows", "frontier", "dlq", "resolved", "sink_rows"))
         # a reader's try-lock: held ONLY for the debris scan/heal below,
         # and WITHOUT writing a holder record — last_lease keeps reporting
         # the latest mutator, as documented
-        fd = os.open(self._lease_path(), os.O_CREAT | os.O_RDWR)
+        fd = self._open_lease()
         try:
             # try-lock with a brief (~0.25 s) retry window (see docstring):
             # a concurrent status() holds the flock for milliseconds, so
             # the retries absorb reader-vs-reader contention; a real
             # mutator holds it for its whole maintenance window, outlives
             # the budget, and the contended shape is honest
-            if not self._flock_nb_retry(fd, time.monotonic() + 0.25):
-                return {
-                    "retry_rows": None,
-                    "frontier": None,
-                    "dlq": None,
-                    "resolved": None,
-                    "sink_rows": None,
-                    "swap_debris_found": None,
-                    "debris_heal_errors": None,
-                    "last_lease": _lease_record(),
-                    "maintenance_in_progress": _lease_record(),
-                    "counters": counters,
-                }
-            # debris under the held lease: this field reports what the
-            # status call FOUND — a non-empty value means the previous op
-            # crashed mid-swap and this very call repaired it (or tried:
-            # a heal the filesystem refuses — a fold's old partition that
-            # will not remove — lands in debris_heal_errors instead of
-            # failing the poll, and the debris stays for the next heal)
-            debris = [root + tag for root, tag in self._swap_debris()]
-            debris += self._fold_debris()
-            heal_errors: list[str] = []
-            if debris:
-                heal_errors = self._recover_swaps_locked()["heal_errors"]
+            locked = self._flock_nb_retry(fd, time.monotonic() + 0.25)
+            debris = heal_errors = None
+            if locked:
+                # what the call FOUND: non-empty means the previous op
+                # crashed mid-swap and this very call repaired it (or
+                # tried: a refused heal lands in debris_heal_errors instead
+                # of failing the poll, and the debris stays for the next)
+                debris = [root + tag for root, tag in self._swap_debris()]
+                debris += self._fold_debris()
+                if os.path.exists(self._route_staging()):
+                    debris.append(self._route_staging())
+                heal_errors = self._recover_swaps_locked()["heal_errors"] if debris else []
         finally:
             os.close(fd)  # release BEFORE the Spark jobs (see docstring)
 
@@ -575,47 +591,30 @@ class RetryRouter:
                 "sink_rows": _count(self.sink_path) if count_sink else None,
             }
 
-        # bounded internal retry (the dashboard's never-raise contract):
-        # a compact/fold swapping the ledger between this reader's file
-        # listing and its count job surfaces as an AnalysisException /
-        # FileNotFound from Spark — transient by construction, the swap is
-        # atomic and the next listing sees the new layout.  Retry the count
-        # block a few times (same ~short-budget philosophy as
-        # _flock_nb_retry); a mutator that keeps winning the race is
-        # indistinguishable from live maintenance, so the fallback is the
-        # same honest contended shape the try-lock path returns (counts
-        # None, maintenance_in_progress = the latest lease record) — never
-        # an exception out of a status poll, and never silently partial
-        # numbers (the counts are all-or-None).
+        # the bounded internal retry of the docstring: a swap racing the
+        # count jobs is transient; one that keeps winning degrades the call
+        # to the contended shape (counts all None), never an exception
         from py4j.protocol import Py4JJavaError
         from pyspark.errors import PySparkException
 
-        counted: dict | None = None
-        for attempt in range(3):
+        counted = no_counts
+        for attempt in range(3 if locked else 0):
             try:
                 counted = _counts_once()
                 break
             except (PySparkException, Py4JJavaError):
-                if attempt == 2:
-                    break
-                time.sleep(0.1)
-        if counted is None:
-            counted = {
-                "retry_rows": None,
-                "frontier": None,
-                "dlq": None,
-                "resolved": None,
-                "sink_rows": None,
-            }
+                if attempt < 2:
+                    time.sleep(0.1)
         return {
             **counted,
             "swap_debris_found": debris,
             "debris_heal_errors": heal_errors,
-            "last_lease": _lease_record(),
+            "last_lease": self._lease_record(),
             "maintenance_in_progress": (
-                None if counted["retry_rows"] is not None else _lease_record()
+                None if counted["retry_rows"] is not None else self._lease_record()
             ),
             "counters": counters,
+            "route_timings": route_timings,
         }
 
     def compact(self, spark: SparkSession, archive_to: str | None = None) -> dict:
@@ -667,8 +666,6 @@ class RetryRouter:
         a crash then deleted the terminal-success evidence while the
         uncompacted ledger still held the superseded rows, so delivered
         messages re-entered the frontier and duplicated sink rows."""
-        import shutil
-
         with self._lease("compact"):
             if not os.path.exists(self.retry_path):
                 # ledger empty ⇒ frontier empty ⇒ the resolved index keeps
@@ -992,8 +989,6 @@ class RetryRouter:
         self-heal serving ``route_batch``, a ``status()`` poll) catch the
         raise and DEFER: see ``_recover_swaps_locked``."""
         import json
-        import shutil
-
         staging = os.path.join(root, self._FOLD_NEW)
         manifest = os.path.join(root, self._FOLD_MANIFEST)
         try:
@@ -1196,6 +1191,9 @@ class RetryRouter:
         - ``<root>`` missing, only ``.old``: the swap's intended result was
           the empty (missing-directory) state — the ``.old`` is removed.
 
+        A ``route_batch`` crashed mid-landing leaves its staging, which is
+        discarded: the batch's replay lands it afresh (see ``_land``).
+
         Completion lands exactly the state the crashed op would have left
         after that swap, and every between-swap prefix is already pinned
         dormant-and-convergent (requeue/compact crash tests), so recovery
@@ -1224,24 +1222,15 @@ class RetryRouter:
         reader-starvation the non-blocking ``status()`` removed.  The
         correctness-critical heals (a MISSING ledger directory that may be
         mid-swap) still use the blocking ``recover_swaps``."""
-        import fcntl
-
-        parent = os.path.dirname(self._lease_path())
-        if parent:
-            os.makedirs(parent, exist_ok=True)
-        fd = os.open(self._lease_path(), os.O_CREAT | os.O_RDWR)
+        fd = self._open_lease()
         try:
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-            except OSError:
-                return
-            self._recover_swaps_locked()
+            # a deadline of now: exactly one attempt, no wait
+            if self._flock_nb_retry(fd, time.monotonic()):
+                self._recover_swaps_locked()
         finally:
             os.close(fd)
 
     def _recover_swaps_locked(self) -> dict:
-        import shutil
-
         completed, discarded = [], []
         heal_errors: list[str] = []
 
@@ -1272,6 +1261,14 @@ class RetryRouter:
                     _discard(old)
             elif os.path.exists(old):
                 _discard(old)
+        # a crashed route_batch's batch replays, so its staging is dropped;
+        # a root it emptied (its only partition moved out) is unreadable
+        # and returns to the valid MISSING state
+        if os.path.exists(self._route_staging()):
+            _discard(self._route_staging())
+            for root in self._ledger_roots():
+                if os.path.isdir(root) and not os.listdir(root):
+                    os.rmdir(root)
         # partition-scoped sink folds leave IN-ROOT debris (staging dir /
         # manifest) rather than sibling .old/.new directories; finish or
         # discard those from their own commit-point protocol.  A fold heal
@@ -1304,8 +1301,6 @@ class RetryRouter:
         """Atomically replace the ledger at ``path`` with ``df`` (two local
         renames).  An empty ``df`` leaves the valid MISSING state — an
         empty parquet directory has no footers and cannot be read back."""
-        import shutil
-
         df = df.persist()
         try:
             kept = df.count()

@@ -21,7 +21,9 @@ SF_CORRECT = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="engine-tests", cpus=os.environ.get("TEST_CPUS", "8"))
+    # TEST_CPUS overrides; otherwise get_spark's default ($SPARK_GRAFT_CPUS,
+    # then every local core), so the suite never oversubscribes the box
+    s = get_spark(app_name="engine-tests", cpus=os.environ.get("TEST_CPUS"))
     yield s
 
 

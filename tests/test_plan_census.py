@@ -27,10 +27,16 @@ from tools.plan_census import COLUMNS, census_rows
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _round(path: str) -> int:
+    """The round number of a ``plans/r<NN>/plan_census.tsv`` path."""
+    return int(os.path.basename(os.path.dirname(path))[1:])
+
+
 def _newest_census() -> str:
-    paths = sorted(glob.glob(os.path.join(REPO, "plans", "r*", "plan_census.tsv")))
+    # numeric, not lexicographic: r100 is newer than r99
+    paths = glob.glob(os.path.join(REPO, "plans", "r*", "plan_census.tsv"))
     assert paths, "no committed plans/r*/plan_census.tsv found"
-    return paths[-1]
+    return max(paths, key=_round)
 
 
 def test_registry_plan_census_matches_committed_tsv(spark):

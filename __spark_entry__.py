@@ -3,7 +3,8 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+value-hash).  Both dicts follow the registry's family-interleaved order
+(``registry.interleaved_order``), so a budget cut costs each family a slice.
 
 All real logic lives in ``pulsar_pekko_streams_example_spark`` — this module
 only adapts the registry to the driver's calling convention.
@@ -42,8 +43,8 @@ def entry(spark: SparkSession) -> DataFrame:
 # These runtime confs are applied once per session the first time a query is
 # built against a small-SF directory: few shuffle partitions, and AQE
 # coalescing by size rather than parallelism (at sf0.01 everything fits one
-# 64 MB advisory partition).  bench.py and cluster submits use sf0.1+ paths
-# and their own sessions, so the scale posture is untouched.
+# 64 MB advisory partition).  Larger-SF paths (sf0.1+) and sessions that
+# never go through this module keep their own posture.
 _SMALL_SF_BASENAMES = {"sf0.001", "sf0.01"}
 
 _SMALL_SF_CONFS = {

@@ -6,8 +6,8 @@ clustering; hyperplane signature bands feed both embedding near-dup and
 bucketed ANN; the SimHash fingerprint table feeds the fingerprint report and
 the hamming histogram.  Run standalone, each query re-derives the subtree —
 correct, but when one session runs many registry queries over the same data
-(the bench, the driver's correctness sweep, a real curation run) the same
-corpus-wide fan-out is recomputed per consumer.
+(perfbench's query_mix, the driver's correctness sweep, a real curation run)
+the same corpus-wide fan-out is recomputed per consumer.
 
 ``shared_df`` memoizes and persists such a subtree once per (application,
 key): the first caller materializes it (MEMORY_AND_DISK — corpus-scale
@@ -98,8 +98,7 @@ def shared_obj(
     (application, key) under the same per-key lock discipline.
 
     Unlike ``shared_df`` it does NOT persist or count: the builder is
-    responsible for materialization.  ``reset()`` forgets these entries too
-    (the bench's sequential warm pass must measure a REAL rebuild);
+    responsible for materialization.  ``reset()`` forgets these entries too;
     checkpointed blocks of dropped entries are reclaimed by the
     ContextCleaner once unreferenced, which is fine — entries here are
     vocab-bounded, not corpus-sized."""
@@ -124,20 +123,21 @@ _BUILT_OBJ: dict[tuple, object] = {}
 def reset(spark: SparkSession) -> None:
     """Unpersist and forget every shared subtree built by this application.
 
-    Measurement hook, not a production path: the bench's sequential pass
-    re-times each warm build contention-free AFTER the concurrent mix, and
-    a cache hit would measure the memo (microseconds) instead of the build.
-    Dropping the entries in dependency-agnostic bulk is safe because the
-    builds re-memoize on next call.
+    Census/test hook, not a production path: ``tools/plan_census.census_rows``
+    and the operator tests call it so each plan or build starts from a cold
+    cache.  Dropping the entries in dependency-agnostic bulk is safe because
+    the builds re-memoize on next call.
 
-    ``_BUILDING`` locks are deliberately LEFT IN PLACE: a concurrent
-    ``shared_df`` caller may hold (or be queued on) a key's lock, and popping
-    it would hand the next caller a fresh lock for the same key — two threads
-    would then build and persist the same subtree, leaking the overwritten
-    entry's partitions until app exit.  Keeping the lock object means rebuild
-    serialization per key survives a reset; the few retained Lock objects are
-    trivially small.  Eviction blocks so a re-timed rebuild that starts right
-    after reset() never overlaps the old partitions' eviction I/O."""
+    Contract: reset() must NOT run concurrently with ``shared_df`` /
+    ``shared_obj`` builders.  A build that finishes after a concurrent
+    reset() stores its pre-reset result again, so the next caller would get
+    an entry built before the reset.  Every caller is single-threaded.
+
+    ``_BUILDING`` locks are left in place (popping one a caller still holds
+    would hand the next caller a fresh lock for the same key); the retained
+    Lock objects are trivially small.  Eviction blocks so a rebuild that
+    starts right after reset() never overlaps the old partitions' eviction
+    I/O."""
     app_id = spark.sparkContext.applicationId
     with _REGISTRY_LOCK:
         mine = [k for k in _BUILT if k[0] == app_id]

@@ -250,32 +250,33 @@ def _pair_cosines(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     NULL-cosine and NaN→-1 rules.
 
     Per pair, in the JVM/DuckDB twin order exactly:
-    - either side has a NULL element, or lengths differ (zip_with NULL-pads)
-      → cosine NULL (NaN in the output buffer → Arrow null);
+    - either side has a NULL element → cosine NULL (NaN in the output
+      buffer → Arrow null);
+    - prod = na * nb (the JVM-computed norms ride in, so the product is the
+      same double); prod == 0 → -1, ragged or not — the CASE branch the
+      declarative twin takes before it ever reads the dot;
+    - lengths differ (zip_with NULL-pads, so the dot is NULL) → NULL;
     - else dot = dimension-ordered left fold, one multiply then one add
       per dimension over the batch.  The two are deliberately NOT fused:
       a fused multiply-add rounds once where the JVM's zip_with aggregate
       rounds twice, so only the unfused sequence keeps the doubles
-      bit-identical;
-    - prod = na * nb (the JVM-computed norms ride in, so the product is the
-      same double); prod == 0 → -1; NaN quotient → -1 (nanvl twin); ±Inf
-      survives."""
+      bit-identical; NaN quotient → -1 (nanvl twin); ±Inf survives."""
     import numpy as np
 
     for pdf in batches:
         n = len(pdf)
         if not n:
             continue
-        out = np.full(n, np.nan)  # NaN → Arrow null → SQL NULL cosine
         la = pdf["ea"].map(len).to_numpy(dtype=np.int64)
         lb = pdf["eb"].map(len).to_numpy(dtype=np.int64)
-        na = pdf["na"].to_numpy(dtype=np.float64)
-        nb = pdf["nb"].to_numpy(dtype=np.float64)
-        clean = (
-            ~pdf["hna"].to_numpy(dtype=bool)
-            & ~pdf["hnb"].to_numpy(dtype=bool)
-            & (la == lb)
+        prod = pdf["na"].to_numpy(dtype=np.float64) * pdf["nb"].to_numpy(
+            dtype=np.float64
         )
+        normed = ~pdf["hna"].to_numpy(dtype=bool) & ~pdf["hnb"].to_numpy(dtype=bool)
+        zero = normed & (prod == 0.0)
+        # NaN → Arrow null → SQL NULL cosine
+        out = np.where(zero, -1.0, np.nan)
+        clean = normed & ~zero & (la == lb)
         ea_cells = pdf["ea"].to_numpy()
         eb_cells = pdf["eb"].to_numpy()
         for L in np.unique(la[clean]):
@@ -291,12 +292,9 @@ def _pair_cosines(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 dots = np.zeros(rows.size, dtype=np.float64)
                 for d in range(L):
                     dots += A[:, d] * B[:, d]
-            prod = na[rows] * nb[rows]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                c = dots / prod
-            c = np.where(prod == 0.0, -1.0, c)
-            c = np.where(np.isnan(c), -1.0, c)
-            out[rows] = c
+            with np.errstate(invalid="ignore"):
+                c = dots / prod[rows]
+            out[rows] = np.where(np.isnan(c), -1.0, c)
         yield pd.DataFrame(
             {"vec_a": pdf["vec_a"], "vec_b": pdf["vec_b"], "cosine": out}
         )

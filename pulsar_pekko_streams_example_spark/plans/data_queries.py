@@ -3255,11 +3255,11 @@ def ann_method_recall_matrix(
     # CONCURRENTLY.  The r16 cProfile pinned this query's ~9.9 s build wall
     # on 18,225 py4j round-trips (7.0 s socket wait) plus per-op eager
     # re-analysis of the deep ANN trees — pure driver-side latency with no
-    # Spark jobs involved, which threads overlap exactly like the bench's
-    # own 28-thread mix overlaps whole queries.  The union consumes results
-    # in dict order (pool.map preserves input order), so the logical and
-    # physical plans are byte-identical to the sequential build (diffed:
-    # plans/r17/ann_method_recall_matrix_{before,after}.txt).
+    # Spark jobs involved, which threads overlap exactly like a concurrent
+    # query mix overlaps whole queries.  The union consumes results in dict
+    # order (pool.map preserves input order), so the logical and physical
+    # plans are byte-identical to the sequential build (the plan census in
+    # plans/plan_census.tsv pins its shape).
     from concurrent.futures import ThreadPoolExecutor
 
     def tagged(item):

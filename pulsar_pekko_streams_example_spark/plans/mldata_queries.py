@@ -1674,8 +1674,7 @@ def _shared_bpe_chain(
     the multi-consumer staging table of the tokenizer pipeline: train once,
     fan out encode-stats and fertility from the SAME merge list.  Same
     session-scoped posture as cache.shared_df (the long-standing
-    shared-subtree design); cache.reset() drops it so the bench's
-    sequential pass measures a real rebuild."""
+    shared-subtree design); cache.reset() drops it."""
     from pulsar_pekko_streams_example_spark.operators import cache
 
     def build():

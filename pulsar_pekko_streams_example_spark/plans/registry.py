@@ -53,27 +53,11 @@ def register(
 
 
 # Export order for the driver contract.  The driver's correctness gate walks
-# ``queries()`` in dict order under a wall-clock budget.  Round 1 exported
-# whole families in sequence and the budget starved whichever family went
-# last (core/TPC-H got zero rows).  Families are now INTERLEAVED round-robin
-# — cycle i takes the i-th registered query of every family — so a budget cut
-# costs a slice of each family instead of entire families.  The §2-attesting
-# core family leads each cycle.
-#
-# On top of the interleave, queries are ROTATED by driver-check history: the
-# driver leaves its per-round verdicts in CORRECTNESS_r{N}.json at the repo
-# root, and any query without a green row in ANY prior round sorts before
-# every query that already has one.  The ~50-query-per-round budget therefore
-# always lands on the never-checked (or previously red) remainder first, and
-# coverage converges to all queries in ceil(N/budget) rounds with no manual
-# curation.
-#
-# The rotation is CHANGE-AWARE (round-6 fix of the round-5 staleness gap): a
-# green row only attests the code the driver actually ran, so each round's
-# fingerprints are recorded in QUERY_FINGERPRINTS.json and a query whose
-# build/oracle (or one-hop referenced library code) changed after its last
-# green row re-enters the fronted partition — see query_fingerprint /
-# _fresh_checked and tools/fingerprint_queries.py.
+# ``queries()`` in dict order under a wall-clock budget.  Exporting whole
+# families in sequence let the budget starve whichever family went last, so
+# families are INTERLEAVED round-robin — cycle i takes the i-th registered
+# query of every family — and a budget cut costs a slice of each family
+# instead of entire families.  The §2-attesting core family leads each cycle.
 _MODULE_ORDER = [
     "core_queries",
     "tpch_queries",
@@ -86,155 +70,20 @@ _MODULE_ORDER = [
 ]
 
 
-def _green_rounds(root: "Path | None" = None) -> dict[str, int]:
-    """Per query, the LATEST round with a GREEN driver row in that round's
-    CORRECTNESS file (name → round number).
-
-    A red or errored row does NOT count as checked — the query stays at the
-    front of the export order until the driver confirms the fix.  Missing or
-    malformed files are ignored (round 1 starts with none).
-    """
-    import json
-    import re
-    from pathlib import Path
-
-    latest: dict[str, int] = {}
-    if root is None:
-        root = Path(__file__).resolve().parents[2]
-    for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = re.match(r"CORRECTNESS_r(\d+)\.json", path.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            rows = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            if (
-                row.get("err") is None
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match", True)
-            ):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def _driver_checked(root: "Path | None" = None) -> frozenset[str]:
-    """Names holding a GREEN driver row in any prior round's CORRECTNESS file
-    (union across rounds; see ``_green_rounds`` for the per-name round)."""
-    return frozenset(_green_rounds(root))
-
-
-def _code_names(code) -> set[str]:
-    """Global names referenced by a code object, including nested lambdas /
-    comprehensions (their code objects live in co_consts)."""
-    import types
-
-    names = set(code.co_names)
-    for const in code.co_consts:
-        if isinstance(const, types.CodeType):
-            names |= _code_names(const)
-    return names
-
-
-def query_fingerprint(name: str) -> str:
-    """Content fingerprint of a query's behavior-relevant source.
-
-    Hashes the builder function's source, the oracle SQL, the doc, and — one
-    hop out — everything the builder references by global name that lives in
-    this package: a referenced FUNCTION contributes its own source, a
-    referenced MODULE (e.g. ``similarity``, ``clustering``) contributes its
-    whole file, and a referenced module-level CONSTANT contributes its repr.
-    The driver-check rotation compares this against the fingerprint recorded
-    for the round of the query's last green row (QUERY_FINGERPRINTS.json):
-    an edit AFTER that row — including a library-operator edit the registered
-    wrapper never shows (e.g. operators/similarity.py under ann_cosine_topk)
-    — makes the row stale and re-fronts the query for the driver budget.
-
-    One hop is a heuristic, deliberately: recursing the full import graph
-    would stale most of the registry on any operators/ edit (a 50-query
-    budget cannot absorb that), while builder-source-only missed every
-    library edit round 5 produced.  The failure mode of a missed deep edit
-    is the pre-existing one (a stale green row), now strictly rarer.
-    """
-    import hashlib
-    import inspect
-    import types
-
-    spec = REGISTRY[name]
-    fn = spec.build
-    parts = [inspect.getsource(fn), spec.oracle or "", spec.doc]
-    pkg = __name__.split(".", 1)[0]
-    for ref in sorted(_code_names(fn.__code__)):
-        obj = fn.__globals__.get(ref)
-        if obj is None:
-            continue
-        if isinstance(obj, types.ModuleType):
-            if obj.__name__.startswith(pkg) and getattr(obj, "__file__", None):
-                from pathlib import Path
-
-                parts.append(f"{ref}::{Path(obj.__file__).read_text()}")
-        elif callable(obj):
-            if getattr(obj, "__module__", "").startswith(pkg):
-                try:
-                    parts.append(f"{ref}::{inspect.getsource(obj)}")
-                except (OSError, TypeError):
-                    parts.append(f"{ref}::{obj!r}")
-        else:
-            # module-level constant (threshold, cap, SQL fragment, ...)
-            parts.append(f"{ref}::{obj!r}")
-    return hashlib.sha256("\n".join(parts).encode()).hexdigest()
-
-
-def _fingerprint_snapshot(root: "Path | None" = None) -> dict:
-    """QUERY_FINGERPRINTS.json: {name: {str(round): fingerprint}} — the
-    fingerprint each query had when round N's driver check ran (the tree at
-    round N's artifact commit).  Rounds 1-5 were reconstructed from git
-    history (tools/fingerprint_queries.py --bootstrap docs the procedure);
-    the current round's entries are refreshed by ``--update`` before each
-    commit.  Missing file/entries degrade CONSERVATIVELY: a green row whose
-    round has no recorded fingerprint counts as stale and re-fronts."""
-    import json
-    from pathlib import Path
-
-    if root is None:
-        root = Path(__file__).resolve().parents[2]
-    try:
-        snap = json.loads((root / "QUERY_FINGERPRINTS.json").read_text())
-    except (OSError, ValueError):
-        return {}
-    return snap if isinstance(snap, dict) else {}
-
-
 def interleaved_order() -> list[str]:
-    """Family-interleaved registry order, WITHOUT the driver-check rotation.
-
-    This is the submission order bench.py uses: cycle i takes the i-th
-    registered query of every family, so heavy corpus-fan-out queries (the
-    dedup/similarity family) are staggered between light ones and the
-    session-shared subtrees (_shared_pairs et al.) materialize while other
-    families' work keeps the cores busy.  The driver-facing export order
-    (_export_order) applies the checked-history rotation ON TOP of this;
-    feeding that rotated order to the bench once front-loaded 70+ never-
-    checked queries and packed the entire near-dup family into one
-    contended tail burst (measured: 31.6 s → 62.1 s makespan at sf0.1)."""
+    """Family-interleaved registry order: cycle i takes the i-th registered
+    query of every family (families in ``_MODULE_ORDER``, then any other
+    family in registration order).  Besides spreading a budget cut across
+    families, this staggers the heavy corpus-fan-out queries (the
+    dedup/similarity family) between light ones when the registry is run
+    concurrently."""
     import pulsar_pekko_streams_example_spark.plans  # noqa: F401  (triggers registration)
 
-    insertion = {name: i for i, name in enumerate(REGISTRY)}
     families: dict[str, list[str]] = {m: [] for m in _MODULE_ORDER}
-    for name in sorted(REGISTRY, key=insertion.__getitem__):
-        mod = REGISTRY[name].build.__module__.rsplit(".", 1)[-1]
-        families.setdefault(mod, []).append(name)
+    for name, spec in REGISTRY.items():
+        families.setdefault(spec.build.__module__.rsplit(".", 1)[-1], []).append(name)
 
-    ordered_families = [families[m] for m in _MODULE_ORDER] + [
-        fam for m, fam in families.items() if m not in _MODULE_ORDER
-    ]
+    ordered_families = list(families.values())
     interleaved: list[str] = []
     for cycle in range(max((len(f) for f in ordered_families), default=0)):
         for fam in ordered_families:
@@ -243,96 +92,13 @@ def interleaved_order() -> list[str]:
     return interleaved
 
 
-def added_round(name: str) -> tuple[int, str]:
-    """Round a query was added, from an ``added-rN[x]`` tag ((0, '') =
-    original; a letter suffix like ``added-r3b`` marks a later batch
-    WITHIN a round and sorts after the round's plain batch).
-
-    Within the unchecked partition, longest-waiting queries go first:
-    a query added this round has had zero chances at the driver budget,
-    but one carried over from earlier rounds is the coverage debt the
-    rotation exists to pay down — it must not be displaced by fresh
-    additions that would interleave ahead of it."""
-    import re
-
-    for t in REGISTRY[name].tags:
-        if t.startswith("added-r"):
-            body = t[7:]
-            m = re.match(r"(\d+)(.*)", body)
-            if m:
-                return (int(m.group(1)), m.group(2))
-    return (0, "")
-
-
-def _batched_round_robin(
-    names: list[str],
-    batch_of: Callable[[str], object],
-    family_of: Callable[[str], str],
-) -> list[str]:
-    """Order ``names`` by batch, round-robining families WITHIN each batch.
-
-    Pure function so the interleave invariant is testable under arbitrary
-    synthetic rotations (not just today's checked-set): batches sort by
-    their key; inside a batch, cycle i emits the i-th name of every family
-    present in that batch (family order = first appearance in ``names``).
-    The invariant this yields — and the one the registry test asserts — is
-    that within a batch no family contributes an (i+1)-th query before every
-    family still holding queries in that batch contributed its i-th.  The
-    round-2 regression (a global ``(round, interleave_idx)`` sort let two
-    families monopolize the front whenever their global indices happened to
-    lead) cannot recur under this construction."""
-    batches: dict[object, list[str]] = {}
-    for n in names:
-        batches.setdefault(batch_of(n), []).append(n)
-    ordered: list[str] = []
-    for key in sorted(batches):  # type: ignore[type-var]
-        fams: dict[str, list[str]] = {}
-        for n in batches[key]:
-            fams.setdefault(family_of(n), []).append(n)
-        fam_lists = list(fams.values())
-        for cycle in range(max((len(f) for f in fam_lists), default=0)):
-            for fam in fam_lists:
-                if cycle < len(fam):
-                    ordered.append(fam[cycle])
-    return ordered
-
-
-def _fresh_checked(root: "Path | None" = None) -> frozenset[str]:
-    """Names whose latest green driver row still attests the CURRENT code:
-    green in some round R, and the fingerprint recorded for R equals the
-    query's fingerprint now.  A query edited after its last green row (the
-    round-5 staleness gap: ~17 silently stale rows) drops out of this set
-    and re-enters the fronted partition until the driver re-greens it."""
-    greens = _green_rounds(root)
-    snap = _fingerprint_snapshot(root)
-    fresh: set[str] = set()
-    for name, rnd in greens.items():
-        if name not in REGISTRY:
-            continue  # renamed/removed query; nothing to export
-        if snap.get(name, {}).get(str(rnd)) == query_fingerprint(name):
-            fresh.add(name)
-    return frozenset(fresh)
-
-
-def _export_order() -> list[str]:
-    interleaved = interleaved_order()
-    checked = _fresh_checked()
-    unchecked = [n for n in interleaved if n not in checked]
-    fronted = _batched_round_robin(
-        unchecked,
-        batch_of=added_round,
-        family_of=lambda n: REGISTRY[n].build.__module__,
-    )
-    return fronted + [n for n in interleaved if n in checked]
-
-
 def all_queries() -> dict[str, QueryFn]:
-    return {name: REGISTRY[name].build for name in _export_order()}
+    return {name: REGISTRY[name].build for name in interleaved_order()}
 
 
 def all_oracles() -> dict[str, str]:
     return {
         name: REGISTRY[name].oracle
-        for name in _export_order()
+        for name in interleaved_order()
         if REGISTRY[name].oracle is not None
     }

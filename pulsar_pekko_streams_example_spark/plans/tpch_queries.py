@@ -1505,7 +1505,7 @@ _PORTABLE_SQL = (
     "SQL TEXT instead of the DataFrame DSL — and the text is ANSI-portable "
     "enough that the IDENTICAL string is the DuckDB oracle (shared "
     "date_trunc, decimal-exact SUM, explicit casts).  Registers a prefixed "
-    "temp view (idempotent, so bench's concurrent FAIR-pool workers can race "
+    "temp view (idempotent, so concurrent FAIR-pool clients can race "
     "on it harmlessly) and hands the text to Catalyst, which plans it "
     "exactly like the DSL queries — same pushdown, same codegen.",
     tags=("sql-api", "aggregation", "added-r2"),

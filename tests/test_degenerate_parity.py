@@ -351,6 +351,66 @@ def test_adversarial_embedding_parity(
     assert not problems, f"{name} [{why}]: " + "; ".join(problems)
 
 
+def test_pair_cosines_match_safe_cos_on_degenerate_pairs(spark, tmp_path):
+    """The Arrow pair-cosine fold behind scored_candidate_pairs must return
+    what the declarative ``safe_cos(DOT(ea, eb), na * nb)`` returns in both
+    engines, pair by pair — including the ragged zero-norm corner, where the
+    prod = 0 branch wins over the NULL-padded dot (-1, not NULL)."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from pulsar_pekko_streams_example_spark.operators import similarity as S
+    from pulsar_pekko_streams_example_spark.plans.data_queries import _duck_dot
+
+    nan = float("nan")
+    pairs = [
+        (1, [0.0, 0.0], [0.0, 0.0, 0.0]),  # ragged, both zero-norm -> -1
+        (2, [], [0.0]),  # ragged, empty vs zero-norm -> -1
+        (3, [0.0, 0.0], [1.0, 2.0, 3.0]),  # ragged, one zero-norm -> -1
+        (4, [1.0, 2.0], [1.0, 2.0, 3.0]),  # ragged, nonzero norms -> NULL
+        (5, [1.0, None], [0.0, 0.0]),  # NULL element -> NULL
+        (6, [0.0, 0.0], [0.0, 0.0]),  # zero-norm, same length -> -1
+        (7, [1.0, 2.0], [2.0, 1.0]),  # sane
+        (8, [nan, 1.0], [1.0, 1.0]),  # NaN -> -1
+        (9, [1.0], [1.0, nan]),  # ragged, NaN norm -> NULL
+    ]
+    path = str(tmp_path / "pairs.parquet")
+    spark.createDataFrame(
+        pairs, "vec_a bigint, ea array<double>, eb array<double>"
+    ).write.parquet(path)
+    base = spark.read.parquet(path).select(
+        "vec_a",
+        F.lit(0).cast("bigint").alias("vec_b"),
+        "ea",
+        "eb",
+        F.expr(S._norm("ea")).alias("na"),
+        F.expr(S._norm("eb")).alias("nb"),
+    )
+    folded = base.select(
+        "vec_a", "vec_b", "ea", "na", F.isnull("na").alias("hna"),
+        "eb", "nb", F.isnull("nb").alias("hnb"),
+    ).mapInPandas(S._pair_cosines, S._PAIR_COS_SCHEMA)
+    declarative = base.select(
+        "vec_a",
+        F.expr(S.safe_cos(S.DOT.format(a="ea", b="eb"), "na * nb", "spark")).alias("cosine"),
+    )
+    duck_norm = "sqrt({})".format
+    duck_cos = S.safe_cos(
+        _duck_dot("ea", "eb"),
+        f"{duck_norm(_duck_dot('ea', 'ea'))} * {duck_norm(_duck_dot('eb', 'eb'))}",
+        "duckdb",
+    )
+    oracle = duckdb.sql(
+        f"SELECT vec_a, {duck_cos} AS cosine FROM read_parquet('{path}/*.parquet')"
+    ).fetchall()
+
+    got = {r.vec_a: r.cosine for r in folded.collect()}
+    want = {r.vec_a: r.cosine for r in declarative.collect()}
+    assert got == want
+    assert got == dict(oracle)
+    assert [got[i] for i in (1, 2, 3, 4, 5, 6)] == [-1.0, -1.0, -1.0, None, None, -1.0]
+
+
 # ---------------------------------------------------------------------------
 # Adversarial EVENT shapes (round-5 sweep findings)
 #

@@ -70,8 +70,8 @@ def test_shared_df_memoizes_and_substitution_is_exact(spark):
     b = shared_df(spark, ("t-memo", SF_CORRECT), build)
     assert a is b and len(builds) == 1
 
-    # reset() (bench's sequential warm re-time hook) must force a fresh
-    # build on the next call — a stale memo would measure microseconds
+    # reset() (the census/test cold-cache hook) must force a fresh build
+    # on the next call
     from pulsar_pekko_streams_example_spark.operators import cache
 
     cache.reset(spark)
@@ -110,7 +110,7 @@ def test_shared_df_memoizes_and_substitution_is_exact(spark):
 
 def test_shared_obj_memoizes_and_bpe_chain_substitution_is_exact(spark):
     """operators/cache.py::shared_obj (round 17): one build per key, reset()
-    forgets (the bench's sequential pass must measure a REAL chain rebuild),
+    forgets (the next call rebuilds the chain),
     and the shared-chain registry paths reproduce the fresh-chain cores
     exactly — the BPE sharing must be invisible in results."""
     from pulsar_pekko_streams_example_spark.operators import cache

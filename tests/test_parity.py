@@ -1,7 +1,7 @@
 """Every oracle-checked query in the registry must match DuckDB exactly.
 
-This is the local mirror of the driver's t2 correctness gate
-(CORRECTNESS_r{N}.json).  Defaults to the driver's own scale,
+This is the local mirror of the driver's t2 correctness gate (row count +
+schema + order-insensitive value hash).  Defaults to the driver's own scale,
 PARITY_SF_DIR=/root/testdata/sf0.01; export PARITY_SF_DIR=/root/testdata/sf0.001
 for a faster smoke pass while iterating, or /root/testdata/sf0.1 for the
 bench-scale consistency pass (last full run: 170/170 green in ~3 min on

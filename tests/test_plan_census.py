@@ -1,7 +1,7 @@
 """Registry-wide physical-plan census gate (VERDICT r16 ask #7).
 
-The committed census (plans/r*/plan_census.tsv, newest round wins) pins one
-row of operator counts per query — Exchange / join-strategy / Window / scan /
+The committed census (plans/plan_census.tsv) pins one row of operator
+counts per query — Exchange / join-strategy / Window / scan /
 pushdown counts at sf0.001.  This test recomputes every row and diffs it
 ±0 against the file, so a restructure that silently forks a subtree (the
 exact failure mode the ann_method_recall_matrix ledger warns about: reuse
@@ -9,14 +9,13 @@ requires exact canonical equality, and ANY per-branch drift replants a
 corpus arm) fails CI with the per-query delta instead of shipping.
 
 Deliberate contract: a plan-shape CHANGE is not a bug — it is a decision.
-When a round changes a query's plan on purpose, regenerate the census
-(python tools/plan_census.py plans/r<NN>/plan_census.tsv) and commit it with
-the change; the diff then documents exactly which queries moved.
+When a change moves a query's plan on purpose, regenerate the census
+(python tools/plan_census.py plans/plan_census.tsv) and commit it with the
+change; the diff then documents exactly which queries moved.
 """
 
 from __future__ import annotations
 
-import glob
 import os
 
 from pulsar_pekko_streams_example_spark.plans import REGISTRY
@@ -25,23 +24,11 @@ from tests.conftest import SF_SMOKE
 from tools.plan_census import COLUMNS, census_rows
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _round(path: str) -> int:
-    """The round number of a ``plans/r<NN>/plan_census.tsv`` path."""
-    return int(os.path.basename(os.path.dirname(path))[1:])
-
-
-def _newest_census() -> str:
-    # numeric, not lexicographic: r100 is newer than r99
-    paths = glob.glob(os.path.join(REPO, "plans", "r*", "plan_census.tsv"))
-    assert paths, "no committed plans/r*/plan_census.tsv found"
-    return max(paths, key=_round)
+CENSUS = os.path.join(REPO, "plans", "plan_census.tsv")
 
 
 def test_registry_plan_census_matches_committed_tsv(spark):
-    path = _newest_census()
-    with open(path) as fh:
+    with open(CENSUS) as fh:
         header = fh.readline().rstrip("\n").split("\t")
         assert tuple(header) == COLUMNS, (header, COLUMNS)
         pinned = {}
@@ -51,7 +38,7 @@ def test_registry_plan_census_matches_committed_tsv(spark):
 
     assert set(pinned) == set(REGISTRY), (
         "registry and census disagree on the query set — regenerate "
-        f"{path} (missing: {sorted(set(REGISTRY) - set(pinned))}, "
+        f"{CENSUS} (missing: {sorted(set(REGISTRY) - set(pinned))}, "
         f"stale: {sorted(set(pinned) - set(REGISTRY))})"
     )
 
@@ -71,7 +58,7 @@ def test_registry_plan_census_matches_committed_tsv(spark):
             }
             diffs.append((name, delta))
     assert not diffs, (
-        f"{len(diffs)} queries drifted from {os.path.relpath(path, REPO)} "
+        f"{len(diffs)} queries drifted from {os.path.relpath(CENSUS, REPO)} "
         "(intentional? regenerate the census and commit it with the "
         f"change): {diffs}"
     )

@@ -1,145 +1,18 @@
 """Registry export-order contract.
 
-The driver walks ``queries()`` in dict order under a ~50-query wall-clock
-budget, so the order IS the coverage policy: families interleave round-robin
-and queries without a green driver CORRECTNESS row sort before ones already
-confirmed (see registry._export_order).
+The driver walks ``queries()`` in dict order under a wall-clock budget, so
+the order IS the coverage policy: families interleave round-robin, so a
+budget cut costs each family a slice (see registry.interleaved_order).
 """
 
 from __future__ import annotations
 
-import json
-import re
-
 from pulsar_pekko_streams_example_spark.plans.registry import (
     REGISTRY,
-    _batched_round_robin,
-    _driver_checked,
-    _export_order,
-    _fresh_checked,
-    _green_rounds,
-    added_round,
-    query_fingerprint,
+    all_oracles,
+    all_queries,
+    interleaved_order,
 )
-
-
-def _write(path, payload):
-    path.write_text(json.dumps(payload))
-
-
-def test_driver_checked_counts_only_green_rows(tmp_path):
-    _write(
-        tmp_path / "CORRECTNESS_r01.json",
-        {
-            "green": {"rows_match": True, "schema_match": True, "hash_match": True, "err": None},
-            "rows_only": {"rows_match": None, "schema_match": None, "hash_match": None, "err": "no_oracle"},
-            "red_hash": {"rows_match": True, "schema_match": True, "hash_match": False, "err": None},
-            "errored": {"rows_match": None, "schema_match": None, "hash_match": None, "err": "boom"},
-            # rows-only check that the driver DID pass (no oracle by design):
-            # hash_match absent entirely, err null
-            "weak_green": {"rows_match": True, "schema_match": True, "err": None},
-        },
-    )
-    checked = _driver_checked(tmp_path)
-    assert checked == {"green", "weak_green"}
-
-
-def test_driver_checked_unions_rounds_and_survives_garbage(tmp_path):
-    _write(
-        tmp_path / "CORRECTNESS_r01.json",
-        {"a": {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}},
-    )
-    _write(
-        tmp_path / "CORRECTNESS_r02.json",
-        {"b": {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}},
-    )
-    (tmp_path / "CORRECTNESS_r03.json").write_text("{not json")
-    _write(tmp_path / "CORRECTNESS_r04.json", ["not", "a", "dict"])
-    assert _driver_checked(tmp_path) == {"a", "b"}
-
-
-def test_driver_checked_empty_when_no_files(tmp_path):
-    assert _driver_checked(tmp_path) == frozenset()
-
-
-def test_export_order_fronts_unchecked_queries():
-    order = _export_order()
-    assert set(order) == set(REGISTRY), "export order must cover the registry exactly"
-    checked = _fresh_checked()
-    flags = [name in checked for name in order]
-    # once the first fresh-checked query appears, every later query is too
-    if True in flags:
-        first_checked = flags.index(True)
-        assert all(flags[first_checked:]), (
-            "an unchecked/stale query sorts after a fresh-checked one: "
-            + str([n for n in order[first_checked:] if n not in checked][:5])
-        )
-
-
-def test_green_rounds_tracks_latest_green(tmp_path):
-    green = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-    red = {"rows_match": True, "schema_match": True, "hash_match": False, "err": None}
-    _write(tmp_path / "CORRECTNESS_r01.json", {"a": green, "b": green})
-    _write(tmp_path / "CORRECTNESS_r03.json", {"a": green, "b": red})
-    assert _green_rounds(tmp_path) == {"a": 3, "b": 1}
-
-
-def test_fresh_checked_drops_queries_edited_after_their_green_row(tmp_path):
-    """THE round-5 staleness gap: a green driver row only attests the code
-    the driver ran.  A query whose fingerprint no longer matches the one
-    recorded for its last green round must re-front the export order."""
-    fresh_name, stale_name = sorted(REGISTRY)[:2]
-    green = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-    _write(tmp_path / "CORRECTNESS_r02.json", {fresh_name: green, stale_name: green})
-    _write(
-        tmp_path / "QUERY_FINGERPRINTS.json",
-        {
-            # fresh: round-2 record equals the current fingerprint
-            fresh_name: {"2": query_fingerprint(fresh_name)},
-            # stale: the code was edited after round 2's check
-            stale_name: {"2": "0" * 64},
-        },
-    )
-    fresh = _fresh_checked(tmp_path)
-    assert fresh_name in fresh
-    assert stale_name not in fresh
-
-
-def test_fresh_checked_is_conservative_without_fingerprint_records(tmp_path):
-    """No ledger (or no entry for the green round) => treat as stale: the
-    rotation must not trust a green row it cannot tie to today's code."""
-    name = sorted(REGISTRY)[0]
-    green = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-    _write(tmp_path / "CORRECTNESS_r01.json", {name: green})
-    assert _fresh_checked(tmp_path) == frozenset()
-    # a record for a DIFFERENT round doesn't rescue it either
-    _write(
-        tmp_path / "QUERY_FINGERPRINTS.json",
-        {name: {"3": query_fingerprint(name)}},
-    )
-    assert _fresh_checked(tmp_path) == frozenset()
-
-
-def test_fingerprint_sees_one_hop_library_edits():
-    """ann_cosine_topk's registered wrapper is three lines; the round-6
-    NULL-contract fix landed in operators/similarity.py without touching the
-    wrapper.  The fingerprint must cover that hop, or library edits would
-    never re-front their queries."""
-    import pulsar_pekko_streams_example_spark.plans.registry as reg
-
-    assert query_fingerprint("ann_cosine_topk") == query_fingerprint(
-        "ann_cosine_topk"
-    ), "fingerprint not deterministic"
-    spec = reg.REGISTRY["ann_cosine_topk"]
-    names = reg._code_names(spec.build.__code__)
-    assert "similarity" in names, "wrapper must reference the similarity module"
-    # and the referenced module resolves inside the package, so its file
-    # content participates in the hash (the one-hop contract)
-    import types
-
-    obj = spec.build.__globals__["similarity"]
-    assert isinstance(obj, types.ModuleType)
-    assert obj.__name__.startswith("pulsar_pekko_streams_example_spark")
 
 
 # the census pin (round-13): bump this number in the SAME commit that adds
@@ -160,123 +33,39 @@ def test_registry_census_is_pinned():
     )
 
 
-def test_registry_ledger_covers_every_query_for_the_upcoming_round():
-    """QUERY_FINGERPRINTS.json must carry a CURRENT-round entry matching
-    today's code for every registry query — otherwise a green row earned
-    this round would read as stale forever after (tools/fingerprint_queries
-    --update refreshes it; run it before committing query edits)."""
-    import json
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parents[1]
-    ledger = json.loads((root / "QUERY_FINGERPRINTS.json").read_text())
-    rounds = [
-        int(m.group(1))
-        for p in root.glob("CORRECTNESS_r*.json")
-        if (m := re.match(r"CORRECTNESS_r(\d+)\.json", p.name))
-    ]
-    upcoming = str(max(rounds, default=0) + 1)
-    missing = [
-        n
-        for n in sorted(REGISTRY)
-        if ledger.get(n, {}).get(upcoming) != query_fingerprint(n)
-    ]
-    assert not missing, (
-        f"stale/missing round-{upcoming} fingerprints (run `python "
-        f"tools/fingerprint_queries.py --update`): {missing[:8]}"
-    )
-
-
-def _assert_batchwise_round_robin(front, batch_of, family_of):
-    """Structural interleave invariant: within each added-round batch, no
-    family contributes its (i+1)-th query before every family that still
-    holds queries in that batch contributed its i-th."""
-    from itertools import groupby
-
-    assert [batch_of(n) for n in front] == sorted(batch_of(n) for n in front), (
-        "unchecked queries out of added-round batch order"
-    )
-    for _, grp in groupby(front, key=batch_of):
-        batch = list(grp)
-        emitted: dict[str, int] = {}
-        remaining = {}
-        for n in batch:
-            remaining[family_of(n)] = remaining.get(family_of(n), 0) + 1
-        for n in batch:
-            fam = family_of(n)
-            cycle = emitted.get(fam, 0)
-            lagging = [
-                f for f, c in remaining.items() if c > 0 and emitted.get(f, 0) < cycle
-            ]
-            assert not lagging, (
-                f"family {fam} reached cycle {cycle + 1} while {lagging} "
-                f"still hold queries at cycle {cycle} (at {n})"
-            )
-            emitted[fam] = cycle + 1
-            remaining[fam] -= 1
+def _assert_round_robin(order, family_of):
+    """Structural interleave invariant: no family contributes its (i+1)-th
+    query before every family that still holds queries contributed its
+    i-th."""
+    emitted: dict[str, int] = {}
+    remaining: dict[str, int] = {}
+    for n in order:
+        remaining[family_of(n)] = remaining.get(family_of(n), 0) + 1
+    for n in order:
+        fam = family_of(n)
+        cycle = emitted.get(fam, 0)
+        lagging = [
+            f for f, c in remaining.items() if c > 0 and emitted.get(f, 0) < cycle
+        ]
+        assert not lagging, (
+            f"family {fam} reached cycle {cycle + 1} while {lagging} "
+            f"still hold queries at cycle {cycle} (at {n})"
+        )
+        emitted[fam] = cycle + 1
+        remaining[fam] -= 1
 
 
 def test_export_order_interleaves_families_within_partition():
-    """Inside the unchecked partition the round-robin interleave survives
-    for TODAY's checked-set (whatever CORRECTNESS files are in the repo)."""
-    order = _export_order()
-    checked = _fresh_checked()
-    front = [n for n in order if n not in checked]
-    if len(front) < 3:
-        return  # nothing meaningful to assert late in the build
-    _assert_batchwise_round_robin(
-        front,
-        batch_of=added_round,
-        family_of=lambda n: REGISTRY[n].build.__module__,
-    )
+    """The driver contract exports exactly the registry, in the
+    family-interleaved order, and that order round-robins the families."""
+    import __spark_entry__
 
-
-def test_interleave_invariant_under_arbitrary_rotations():
-    """The invariant must hold for ANY future checked-set, not just today's:
-    simulate driver rotations by removing random prefixes/subsets of the
-    registry and re-deriving the front partition from the pure builder."""
-    import random
-
-    names = list(REGISTRY)
-    fam = {n: REGISTRY[n].build.__module__ for n in names}
-    rng = random.Random(20260814)
-    for trial in range(25):
-        checked = set(rng.sample(names, rng.randrange(0, len(names) + 1)))
-        unchecked = [n for n in names if n not in checked]
-        front = _batched_round_robin(unchecked, batch_of=added_round, family_of=fam.__getitem__)
-        assert sorted(front) == sorted(unchecked)
-        _assert_batchwise_round_robin(front, batch_of=added_round, family_of=fam.__getitem__)
-
-
-def test_batched_round_robin_pure_examples():
-    """Hand-checkable example: two batches, uneven families."""
-    names = ["a1", "b1", "a2", "a3", "c1", "b2"]
-    batch = {"a1": 0, "b1": 0, "a2": 0, "a3": 1, "c1": 1, "b2": 1}.__getitem__
-    family = {"a1": "A", "b1": "B", "a2": "A", "a3": "A", "c1": "C", "b2": "B"}.__getitem__
-    out = _batched_round_robin(names, batch_of=batch, family_of=family)
-    # batch 0: A has [a1, a2], B has [b1] -> a1, b1, a2
-    # batch 1: A [a3], C [c1], B [b2] in first-appearance order -> a3, c1, b2
-    assert out == ["a1", "b1", "a2", "a3", "c1", "b2"]
-
-
-def test_unchecked_partition_orders_longest_waiting_first():
-    """Queries added in a later round (tag added-rN) must not displace
-    unchecked queries carried over from earlier rounds — the driver budget
-    pays down coverage debt before trying anything new."""
-    checked = _fresh_checked()
-    order = [n for n in _export_order() if n not in checked]
-
-    def added(n):
-        for t in REGISTRY[n].tags:
-            if t.startswith("added-r"):
-                body = t[7:]
-                m = re.match(r"(\d+)(.*)", body)
-                if m:
-                    return (int(m.group(1)), m.group(2))
-        return (0, "")
-
-    rounds = [added(n) for n in order]
-    assert rounds == sorted(rounds), "unchecked queries out of added-round order"
+    order = interleaved_order()
+    assert list(all_queries()) == order
+    assert list(all_oracles()) == [n for n in order if REGISTRY[n].oracle is not None]
+    assert list(__spark_entry__.queries()) == order
+    assert sorted(order) == sorted(REGISTRY)
+    _assert_round_robin(order, family_of=lambda n: REGISTRY[n].build.__module__)
 
 
 def test_hostile_smoke_every_oracle_binds(duck):
@@ -325,21 +114,3 @@ def test_no_hugeint_oracle_output_columns(duck):
         "oracles with HUGEINT output columns (CAST them to BIGINT): "
         f"{offenders}"
     )
-
-
-def test_bench_warm_deps_name_real_queries():
-    """bench.WARM_DEP keys must be registry queries and its values must be
-    warm-build keys bench knows how to build — a rename in either place
-    would silently drop the wave-0 warm and reintroduce lock-wait walls."""
-    import bench
-
-    for query_name, warm_key in bench.WARM_DEP.items():
-        assert query_name in REGISTRY, query_name
-        assert warm_key in {
-            "hot_shingles",
-            "jaccard_pairs",
-            "neardup_cc",
-            "cooc_edges",
-            # round 17: the shared BPE merge chain (cache.shared_obj)
-            "bpe_chain",
-        }

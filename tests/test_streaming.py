@@ -535,154 +535,6 @@ def test_observe_metrics_listener(spark, tmpdir):
         M.uninstall(spark, listener)
 
 
-def test_transform_with_state_matches_apply_in_pandas(spark, tmpdir):
-    """The Spark 4 transformWithState variant must produce the identical
-    per-key ordered output as the applyInPandasWithState implementation."""
-    from pulsar_pekko_streams_example_spark.streaming import ordered_state as OS
-
-    if not OS.HAVE_TWS:
-        pytest.skip("transformWithState unavailable")
-
-    src = os.path.join(tmpdir, "src")
-    os.makedirs(src)
-    ledger = (
-        attempts_ledger(spark, SF_SMOKE)
-        .filter(F.col("attempt") == 1)
-        .select("message_id", "event_id", "topic", "key", "seq", "attempt", "status", "publish_time")
-    )
-    ledger.coalesce(1).write.parquet(os.path.join(src, "b1"))
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = envelope_file_stream(spark, src + "/*")
-        q = (
-            OS.ordered_per_key_tws(stream)
-            .writeStream.format("memory")
-            .queryName("tws_out")
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(tmpdir, "ckpt_tws"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-    stream2 = envelope_file_stream(spark, src + "/*")
-    q2 = (
-        ordered_per_key(stream2)
-        .writeStream.format("memory")
-        .queryName("aip_out")
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmpdir, "ckpt_aip"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(180)
-
-    tws = sorted(map(tuple, spark.table("tws_out").collect()))
-    aip = sorted(map(tuple, spark.table("aip_out").collect()))
-    assert tws == aip and len(tws) == ledger.count()
-
-
-def test_tws_processor_logic_matches_process_key():
-    """The transformWithState forward-compat path, exercised WITHOUT the
-    protobuf state-server runtime: OrderedKeyProcessor's handleInputRows is
-    pure per-key logic over a ValueState handle, so driving it with a fake
-    handle against the same multi-batch inputs as _process_key (driven with
-    a fake GroupState) must yield identical rows — same cursor carry, same
-    redelivery flags, same processing_index continuity.
-
-    The END-TO-END query (test above) stays env-gated: pyspark's
-    stateful_processor_api_client imports StateMessage_pb2 on every state
-    call and the google.protobuf runtime is absent from this container with
-    installs disallowed (verified: only typeshed stubs on the image).  This
-    test keeps the forward-compat semantics from rotting in the meantime."""
-    from pulsar_pekko_streams_example_spark.streaming import ordered_state as OS
-
-    if not OS.HAVE_TWS_API:
-        pytest.skip("StatefulProcessor API unavailable (Spark < 4)")
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeValueState()
-
-        def getValueState(self, name, schema):  # noqa: N802
-            return self.state
-
-    class FakeGroupState:
-        def __init__(self):
-            self._v = None
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    # four micro-batches for one key: normal progress, a gap (seq 5 before
-    # 4 never arrives), a redelivery of seq 1 alongside new seq 6, and a
-    # positionless (NULL-seq) message next to normal progress — both
-    # variants must handle the NaN identically (round-8 hostile contract)
-    batches = [
-        [("m0", 0, 1), ("m1", 1, 1), ("m2", 2, 1)],
-        [("m5", 5, 1), ("m3", 3, 1)],
-        [("m1b", 1, 2), ("m6", 6, 1)],
-        [("m-null", None, 1), ("m7", 7, 1)],
-    ]
-
-    proc = OS.OrderedKeyProcessor()
-    proc.init(FakeHandle())
-    gstate = FakeGroupState()
-
-    tws_rows, aip_rows = [], []
-    for batch in batches:
-        pdf = pd.DataFrame(batch, columns=["message_id", "seq", "attempt"])
-        for out in proc.handleInputRows(("k1",), iter([pdf.copy()]), None):
-            tws_rows.append(out)
-        for out in OS._process_key(("k1",), iter([pdf.copy()]), gstate):
-            aip_rows.append(out)
-
-    tws = pd.concat(tws_rows, ignore_index=True)
-    aip = pd.concat(aip_rows, ignore_index=True)[list(tws.columns)]
-    pd.testing.assert_frame_equal(
-        tws.astype(aip.dtypes.to_dict()), aip, check_dtype=True
-    )
-    # the scenario actually exercised the interesting states
-    assert tws["is_redelivery"].sum() == 1
-    assert not tws["in_order"].all()
-    assert list(tws["processing_index"]) == list(range(len(tws)))
-    # the positionless row was processed without advancing the cursor
-    nulls = tws[tws["message_id"] == "m-null"]
-    assert len(nulls) == 1 and pd.isna(nulls["seq"].iloc[0])
-    assert not nulls["in_order"].iloc[0]
-
-
 def test_drop_duplicates_within_watermark_absorbs_redelivery(spark, tmpdir):
     """S7 delivery semantics, downstream view: broker redelivery is
     at-least-once, so the same message_id can arrive in multiple
@@ -880,92 +732,110 @@ def test_retry_exhaustion_lands_in_dlq(spark, tmpdir):
     assert spark.read.parquet(router.sink_path).count() == 1  # just m-ok
 
 
-def test_tws_api_flag_true_on_spark4():
-    """HAVE_TWS_API gates the processor-logic unit test above; on a Spark 4
-    image it must be True, or a collateral import failure (not a missing
-    API) silently downgraded it and the gated coverage rotted (round-4
-    advice)."""
-    import pyspark
-
-    from pulsar_pekko_streams_example_spark.streaming import ordered_state as OS
-
-    if int(pyspark.__version__.split(".")[0]) >= 4:
-        assert OS.HAVE_TWS_API
-
-
-def test_streaming_throughput_bench_pipeline(spark):
-    """tools/bench_streaming.py end-to-end smoke at tiny scale: the sink
-    must account for every seeded message across both outcome feeds and
-    the measured rate must be positive — keeps the published throughput
-    tool from rotting as the pipeline pieces evolve."""
-    import importlib.util
-    import pathlib
-
-    path = pathlib.Path(__file__).resolve().parents[1] / "tools" / "bench_streaming.py"
-    spec = importlib.util.spec_from_file_location("bench_streaming", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    result = mod.run(spark, n_messages=2000, seed_files=4)
-    assert result["acked"] + result["nacked"] == 2000
-    assert result["nacked"] == 200  # deterministic failure_mod=10
-    assert result["value"] > 0
+def _drain(df, path, ckpt, partition_by=None):
+    """Run ``df`` to completion into a parquet sink (availableNow) and read
+    the sink back."""
+    writer = (
+        df.writeStream.format("parquet")
+        .option("path", path)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+    )
+    if partition_by:
+        writer = writer.partitionBy(partition_by)
+    writer.start().awaitTermination()
+    return df.sparkSession.read.parquet(path)
 
 
-def test_streaming_ordered_bench_pipeline(spark):
-    """run_ordered smoke: exact sink accounting and a gap-free per-key
-    cursor through the grouped-stateful path at tiny scale."""
-    import importlib.util
-    import pathlib
+def test_streaming_throughput_bench_pipeline(spark, tmpdir):
+    """Backlog → admission-capped file stream → processor → ack/nack sink
+    at tiny scale: the sink must account for every seeded message across
+    both outcome feeds, with the deterministic failure count."""
+    from examples._common import seed_messages
 
-    path = pathlib.Path(__file__).resolve().parents[1] / "tools" / "bench_streaming.py"
-    spec = importlib.util.spec_from_file_location("bench_streaming_ord", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    src = os.path.join(tmpdir, "backlog")
+    seed_messages(spark, 2000).repartition(4).write.parquet(src)
+    stream = envelope_file_stream(spark, src, max_files_per_trigger=8)
+    routed = apply_processor(stream, simulated_processor()).withColumn(
+        "outcome", F.when(F.col("ok"), "ack").otherwise("nack")
+    )
+    out = _drain(
+        routed, os.path.join(tmpdir, "outcomes"), os.path.join(tmpdir, "ckpt"), "outcome"
+    )
+    n_ack = out.filter(F.col("outcome") == "ack").count()
+    n_nack = out.filter(F.col("outcome") == "nack").count()
+    assert n_ack + n_nack == 2000
+    assert n_nack == 200  # deterministic failure_mod=10
 
-    result = mod.run_ordered(spark, n_messages=2000, n_keys=16)
-    assert result["messages"] == 2000
-    assert result["value"] > 0
+
+def test_streaming_ordered_bench_pipeline(spark, tmpdir):
+    """Exact sink accounting and a gap-free per-key cursor through the
+    grouped-stateful path at tiny scale.  The backlog is seeded
+    key-partitioned (each key's full seq range in one file, sorted by
+    seq), so no file-granularity batch split can manufacture a gap."""
+    from examples._common import seed_messages
+
+    src = os.path.join(tmpdir, "backlog")
+    seed_messages(spark, 2000, keys=16).repartition(32, "key").sortWithinPartitions(
+        "key", "seq"
+    ).write.parquet(src)
+    out = _drain(
+        ordered_per_key(envelope_file_stream(spark, src)),
+        os.path.join(tmpdir, "ordered"),
+        os.path.join(tmpdir, "ckpt"),
+    )
+    assert out.count() == 2000
+    assert out.filter(~F.col("in_order")).count() == 0
 
 
-def test_streaming_windowed_bench_pipeline(spark):
-    """run_windowed smoke: the watermarked (guarded-by-default) window path
-    must account for every legitimate message while excluding the seeded
-    year-9999 poison row — the bench doubles as a scale check of the
-    watermarked() front door."""
-    import importlib.util
-    import pathlib
+def test_streaming_windowed_bench_pipeline(spark, tmpdir):
+    """The watermarked (guarded-by-default) window path must account for
+    every legitimate message while excluding a seeded year-9999 poison
+    row: an unguarded watermark would jump to 9999 and late-drop the rest.
+    A heartbeat past the backlog's newest event time closes the tail
+    windows."""
+    from examples._common import seed_messages
 
-    path = pathlib.Path(__file__).resolve().parents[1] / "tools" / "bench_streaming.py"
-    spec = importlib.util.spec_from_file_location("bench_streaming_win", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    n = 2000
+    envelope = ["message_id", "event_id", "topic", "key", "seq", "attempt", "status"]
 
-    result = mod.run_windowed(spark, n_messages=2000)
-    assert result["messages"] == 2000
-    assert result["poisoned_rows_excluded"] == 1
-    assert result["value"] > 0
+    def stamped(message_id, event_id, ts):
+        return seed_messages(spark, 1).select(
+            F.lit(message_id).alias("message_id"),
+            F.lit(event_id).cast("long").alias("event_id"),
+            *envelope[2:],
+            ts.alias("publish_time"),
+        )
+
+    src = os.path.join(tmpdir, "backlog")
+    poison = stamped("poison", -1, F.lit("9999-01-01 00:00:00").cast("timestamp"))
+    seed_messages(spark, n, keys=64).unionByName(poison).repartition(32).write.parquet(src)
+    windowed = (
+        watermarked(envelope_file_stream(spark, src), "10 minutes")
+        .groupBy(F.window("publish_time", "1 minute").alias("w"), "key")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.col("w.start").alias("win_start"), "key", "n")
+    )
+    sink, ckpt = os.path.join(tmpdir, "windows"), os.path.join(tmpdir, "ckpt")
+    _drain(windowed, sink, ckpt)
+    heartbeat = F.lit("2024-01-01 00:00:00").cast("timestamp") + F.make_interval(
+        secs=F.lit(n + 3600)
+    )
+    stamped("heartbeat", -2, heartbeat).coalesce(1).write.mode("append").parquet(src)
+    out = _drain(windowed, sink, ckpt)
+    assert out.agg(F.sum("n")).collect()[0][0] == n
+    assert out.filter(F.year("win_start") == 9999).count() == 0
 
 
 def test_tws_ttl_processor_matches_event_time_timeout_path():
-    """The timer-based TWS idle-TTL processor (OrderedKeyProcessorTTL) must
-    lapse, clamp, and re-cursor EXACTLY like the applyInPandasWithState
-    EventTimeTimeout path: same emitted frames, same expiry point at every
-    step (the two share _ttl_expiry_ms, so a divergence is a state/timer
-    plumbing bug).  Scripted timeline: normal progress, an older
-    in-watermark batch (the running-max clamp — expiry must NOT move
-    backwards), a watermark-driven lapse, and a post-lapse redelivery that
-    both variants must announce as a fresh cursor.  Fake handles — the
-    LIVE TWS query needs the protobuf state-server runtime (HAVE_TWS)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        TimerValues,
-    )
-
+    """The EventTimeTimeout idle-TTL path (``_make_ttl_fn``) over a scripted
+    timeline: normal progress, an older in-watermark batch (the running-max
+    clamp — expiry must NOT move backwards), a watermark-driven lapse, and
+    a post-lapse redelivery that must be announced as a fresh cursor.
+    Driven with a fake GroupState that fires the timeout callback the way
+    the engine does once the watermark passes the key's timeout."""
     from pulsar_pekko_streams_example_spark.streaming import ordered_state as OS
-
-    if not OS.HAVE_TWS_API:
-        pytest.skip("StatefulProcessor API unavailable (Spark < 4)")
 
     TTL = 3_600_000  # 1 h
 
@@ -996,38 +866,6 @@ def test_tws_ttl_processor_matches_event_time_timeout_path():
         def setTimeoutTimestamp(self, t):  # noqa: N802
             self.timeout = t
 
-    class _FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-        def clear(self):
-            self._v = None
-
-    class _FakeTimerHandle:
-        def __init__(self):
-            self.state, self.timers = _FakeValueState(), set()
-
-        def getValueState(self, name, schema):  # noqa: N802
-            return self.state
-
-        def registerTimer(self, t):  # noqa: N802
-            self.timers.add(t)
-
-        def deleteTimer(self, t):  # noqa: N802
-            self.timers.discard(t)
-
-        def listTimers(self):  # noqa: N802
-            return iter(sorted(self.timers))
-
     # (rows, watermark_ms): progress @4:00 → OLDER in-watermark batch @3:00
     # (clamp) → lapse past 5:00 + post-lapse redelivery of seq 2 @6:00
     script = [
@@ -1037,40 +875,32 @@ def test_tws_ttl_processor_matches_event_time_timeout_path():
         ([("a2-redux", 2, 2, pd.Timestamp(2024, 1, 1, 6))], ms(5, 1)),
     ]
 
-    aip_fn = OS._make_ttl_fn(TTL, "publish_time")
-    aip_state = _FakeTTLGroupState()
-    proc = OS.OrderedKeyProcessorTTL(TTL)
-    handle = _FakeTimerHandle()
-    proc.init(handle)
+    fn = OS._make_ttl_fn(TTL, "publish_time")
+    state = _FakeTTLGroupState()
 
-    aip_out, tws_out, expiries = [], [], []
+    out, expiries, lapses = [], [], 0
     for rows, wm in script:
-        # engine simulation: before a batch at watermark `wm`, keys whose
-        # timeout/timer the watermark has passed get the lapse callback
-        if aip_state.exists and aip_state.timeout is not None and wm > aip_state.timeout:
-            aip_state.hasTimedOut = True
-            assert list(aip_fn(("k1",), iter([]), aip_state)) == []
-            aip_state.hasTimedOut = False
-        for t in [t for t in set(handle.timers) if wm > t]:
-            handle.deleteTimer(t)
-            assert list(proc.handleExpiredTimer(("k1",), TimerValues(-1, wm), ExpiredTimerInfo(t))) == []
-        assert aip_state.exists == handle.state.exists()  # lapse in lockstep
+        # engine simulation: before a batch at watermark `wm`, a key whose
+        # timeout the watermark has passed gets the lapse callback
+        if state.exists and state.timeout is not None and wm > state.timeout:
+            state.hasTimedOut = True
+            assert list(fn(("k1",), iter([]), state)) == []  # emits nothing
+            state.hasTimedOut = False
+            assert not state.exists  # the cursor is dropped
+            lapses += 1
 
-        aip_state.wm = wm
+        state.wm = wm
         pdf = pd.DataFrame(rows, columns=["message_id", "seq", "attempt", "publish_time"])
-        aip_out.extend(aip_fn(("k1",), iter([pdf.copy()]), aip_state))
-        tws_out.extend(proc.handleInputRows(("k1",), iter([pdf.copy()]), TimerValues(-1, wm)))
-        # expiry points identical at every step
-        assert handle.timers == {aip_state.timeout}
-        expiries.append(aip_state.timeout)
+        out.extend(fn(("k1",), iter([pdf]), state))
+        expiries.append(state.timeout)
 
-    aip = pd.concat(aip_out, ignore_index=True)
-    tws = pd.concat(tws_out, ignore_index=True)[list(aip.columns)]
-    pd.testing.assert_frame_equal(tws.astype(aip.dtypes.to_dict()), aip, check_dtype=True)
+    aip = pd.concat(out, ignore_index=True)
 
     # the running-max clamp held: the older batch did NOT pull expiry back
     assert expiries[0] == ms(5) and expiries[1] == ms(5)
     # the lapse actually happened and the redelivery re-cursored fresh
+    assert lapses == 1
+    assert expiries[2] == ms(7)
     redux = aip[aip["message_id"] == "a2-redux"]
     assert bool(redux["fresh_cursor"].iloc[0])
     assert not bool(redux["is_redelivery"].iloc[0])
@@ -1152,74 +982,3 @@ def test_processing_index_restarts_at_zero_after_ttl_lapse():
     more = feed([("a2-redux", 2, 2, pd.Timestamp(2024, 1, 1, 6))], ms(5) + 1)
     assert list(more["processing_index"]) == [1]
     assert list(more["fresh_cursor"]) == [False]
-
-
-def test_tws_ttl_end_to_end_matches_apply_in_pandas(spark, tmpdir):
-    """END-TO-END twin of the fake-handle TTL parity test: identical
-    output from ordered_per_key(idle_timeout_ms=...) and
-    ordered_per_key_tws(idle_timeout_ms=...) on a watermarked source,
-    including a lapse + post-lapse redelivery.  Env-gated like the
-    no-timeout variant: the TWS state server needs google.protobuf."""
-    from pulsar_pekko_streams_example_spark.sources.streams import watermarked
-    from pulsar_pekko_streams_example_spark.streaming import ordered_state as OS
-
-    if not OS.HAVE_TWS:
-        pytest.skip("transformWithState unavailable")
-
-    src = os.path.join(tmpdir, "src")
-    os.makedirs(src)
-
-    def envelopes_at(rows, ts):
-        return spark.createDataFrame(
-            [(mid, 0, "t", key, seq, att, "ok", None) for mid, key, seq, att in rows],
-            "message_id string, event_id long, topic string, key string, "
-            "seq long, attempt long, status string, publish_time timestamp",
-        ).withColumn("publish_time", F.lit(ts).cast("timestamp"))
-
-    batches = [
-        ([("a1", "k1", 1, 1), ("a2", "k1", 2, 1)], "2024-01-01 00:00:00"),
-        ([("hb", "k2", 1, 1)], "2024-01-01 05:00:00"),   # lapse k1 (1 h TTL)
-        ([("a2r", "k1", 2, 2)], "2024-01-01 06:00:00"),  # post-lapse redelivery
-    ]
-
-    def run(variant, op):
-        d = os.path.join(tmpdir, variant)
-        vsrc, out_dir, ckpt = (os.path.join(d, p) for p in ("in", "out", "ckpt"))
-        os.makedirs(vsrc)
-        for i, (rows, ts) in enumerate(batches):
-            envelopes_at(rows, ts).coalesce(1).write.parquet(
-                os.path.join(vsrc, f"b{i}")
-            )
-            stream = watermarked(
-                spark.readStream.schema(
-                    "message_id string, event_id long, topic string, key string, "
-                    "seq long, attempt long, status string, publish_time timestamp"
-                ).parquet(vsrc + "/*"),
-                "10 minutes",
-            )
-            q = (
-                op(stream)
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-        return sorted(map(tuple, spark.read.parquet(out_dir).collect()))
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        tws = run("tws", lambda s: OS.ordered_per_key_tws(s, idle_timeout_ms=3_600_000))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    aip = run("aip", lambda s: OS.ordered_per_key(s, idle_timeout_ms=3_600_000))
-    assert tws == aip and len(tws) == 4

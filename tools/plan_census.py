@@ -1,7 +1,8 @@
 """Registry-wide physical-plan census: per-query operator counts (plan
 SHAPE is sf-independent).
 
-Usage: python tools/plan_census.py OUT.tsv [sf_dir]
+Usage: python tools/plan_census.py plans/plan_census.tsv [sf_dir]
+(regenerates the census tests/test_plan_census.py pins).
 Columns: query, ops, exchanges, bnlj, smj, shj, bhj, windows, scans,
 scans_with_pushed_filters.
 

@@ -1,6 +1,6 @@
 """Measure ann_method_recall_matrix's driver-side Python BUILD wall.
 
-The r16 profile (OPTIMIZATION_r16.md): ~9.9 s build, 18,225 py4j
+A cProfile of the original build: ~9.9 s build, 18,225 py4j
 round-trips, 7.0 s socket wait — pure per-query fixed latency, no jobs run.
 Usage: python tools/probe_matrix_build.py [plan_out.txt]
 Prints two build walls (cold-ish + warm) and, with an argument, writes the

@@ -394,10 +394,9 @@ def test_pair_cosines_match_safe_cos_on_degenerate_pairs(spark, tmp_path):
         "vec_a",
         F.expr(S.safe_cos(S.DOT.format(a="ea", b="eb"), "na * nb", "spark")).alias("cosine"),
     )
-    duck_norm = "sqrt({})".format
     duck_cos = S.safe_cos(
         _duck_dot("ea", "eb"),
-        f"{duck_norm(_duck_dot('ea', 'ea'))} * {duck_norm(_duck_dot('eb', 'eb'))}",
+        f"sqrt({_duck_dot('ea', 'ea')}) * sqrt({_duck_dot('eb', 'eb')})",
         "duckdb",
     )
     oracle = duckdb.sql(

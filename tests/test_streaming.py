@@ -798,13 +798,16 @@ def test_streaming_windowed_bench_pipeline(spark, tmpdir):
     from examples._common import seed_messages
 
     n = 2000
-    envelope = ["message_id", "event_id", "topic", "key", "seq", "attempt", "status"]
 
     def stamped(message_id, event_id, ts):
         return seed_messages(spark, 1).select(
             F.lit(message_id).alias("message_id"),
             F.lit(event_id).cast("long").alias("event_id"),
-            *envelope[2:],
+            "topic",
+            "key",
+            "seq",
+            "attempt",
+            "status",
             ts.alias("publish_time"),
         )
 

@@ -13,6 +13,12 @@ Scale posture (100 TB target):
 - shuffle.partitions defaults to the core count locally; on a real cluster
   AQE coalesces from a high initial number, so the default is a floor, not a
   ceiling.
+- Python workers come from the engine's daemon (``worker_daemon``): pyspark's
+  worker drops every zip importer's cache at the start of each task, which
+  re-reads ``pyspark.zip`` 14-18 times a task; the daemon re-reads an archive
+  only when it has changed.  The daemon is the package's own module, so every
+  Python UDF's worker must be able to import the package: ``get_spark`` puts
+  the package's parent directory on the workers' ``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -20,6 +26,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory the package is imported from, for the Python workers
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Runtime-settable confs applied to ANY session we are handed (the driver
 # constructs its own SparkSession for verification, so these must not rely on
@@ -87,6 +96,14 @@ def get_spark(
     ``cpus`` defaults to $SPARK_GRAFT_CPUS or all local cores.  On a real
     cluster the master/resource settings come from spark-submit; this factory
     only pins semantics + optimizer posture.
+
+    Python workers are forked from ``worker_daemon`` (a JVM-launch conf, so
+    set here and not in ``prepare_session``: a session built elsewhere keeps
+    pyspark's stock daemon).  The daemon imports this package, so every
+    Python UDF's worker needs it importable, not only the UDFs that reference
+    it: the package's parent directory is added to
+    ``spark.executorEnv.PYTHONPATH``, after any value in ``extra_conf``.  The
+    driver's own ``PYTHONPATH`` still reaches the workers (Spark appends it).
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4
     shuffle = shuffle_partitions or int(cpus)
@@ -100,6 +117,11 @@ def get_spark(
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)
-    for k, v in (extra_conf or {}).items():
+    extra = dict(extra_conf or {})
+    python_path = [extra.pop("spark.executorEnv.PYTHONPATH", ""), _PACKAGE_ROOT]
+    builder = builder.config(
+        "spark.executorEnv.PYTHONPATH", os.pathsep.join(p for p in python_path if p)
+    ).config("spark.python.daemon.module", f"{__package__}.worker_daemon")
+    for k, v in extra.items():
         builder = builder.config(k, v)
     return prepare_session(builder.getOrCreate())

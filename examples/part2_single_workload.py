@@ -8,19 +8,23 @@ one stream applies a user processor with bounded parallelism
 outcome is assertable).
 
 Spark twin: Arrow-batched processor UDF returning struct(ok, error) — errors
-become data, never stream failure — and the router splits the outcome into
-the ack path and the retry path (two filtered writers).
+become data, never stream failure — and ``RetryRouter.route_batch`` routes
+the outcome in one write: acks to the sink ledger, nacks to the retry
+ledger (or the DLQ once the attempt budget is spent).
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from examples._common import main, seed_messages
-from pulsar_pekko_streams_example_spark.streaming.processor import (
+from pulsar_pekko_streams_example_spark.sources.sinks import republish
+from pulsar_pekko_streams_example_spark.streaming import (
+    RetryRouter,
     apply_processor,
-    route_outcomes,
     simulated_processor,
 )
 
@@ -31,15 +35,20 @@ FAILURE_MOD = 10
 def run(spark: SparkSession, base: str) -> dict:
     messages = seed_messages(spark, N_MESSAGES)
     processed = apply_processor(messages, simulated_processor(FAILURE_MOD))
-    acks, nacks = route_outcomes(processed)
+    router = RetryRouter(
+        sink_path=os.path.join(base, "sink"),
+        retry_path=os.path.join(base, "retry"),
+        dlq_path=os.path.join(base, "dlq"),
+    )
+    router.route_batch(processed, batch_id=0)
 
-    n_ack, n_nack = acks.count(), nacks.count()
-    expected_failures = messages.filter(F.col("event_id") % FAILURE_MOD == 0).count()
-    assert n_nack == expected_failures
+    n_ack = router.counters["acks"]
+    n_nack = router.counters["retries"] + router.counters["dlq"]
+    assert n_nack == N_MESSAGES // FAILURE_MOD
     assert n_ack + n_nack == N_MESSAGES
     # the ack stage increments the hop counter on republish
     # (util/PulsarClientSetup.scala:17)
-    republished = acks.withColumn("attempt", F.col("attempt") + 1)
+    republished = republish(spark.read.parquet(router.sink_path))
     assert republished.agg(F.min("attempt")).collect()[0][0] == 2
     return {"acked": n_ack, "nacked": n_nack}
 

@@ -18,8 +18,8 @@ import argparse
 import sys
 
 from pulsar_pekko_streams_example_spark.plans import REGISTRY, all_queries
+from pulsar_pekko_streams_example_spark.sources.tables import TABLES
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 DEFAULT_SF_DIR = "/root/testdata/sf0.01"
 
 

@@ -52,17 +52,6 @@ def shingle_postings(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     )
 
 
-def shingle_sizes(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
-    """(doc_id, sz) — distinct-shingle count per doc.
-
-    Derived from the postings (shingles are distinct per doc) so the plan
-    shares the scan→tokenize→explode subtree with the inverted-index join
-    instead of re-tokenizing the corpus."""
-    return shingle_postings(docs, n).groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("sz")
-    )
-
-
 def dup_span_doc_coverage(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     """(doc_id, spans, dup): per-document positional-span accounting —
     ``spans`` = token positions carrying an n-gram span, ``dup`` = positions

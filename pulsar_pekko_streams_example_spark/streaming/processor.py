@@ -24,7 +24,6 @@ import numpy as _np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
@@ -151,17 +150,8 @@ def simulated_processor(failure_mod: int = 10) -> Callable[[pd.DataFrame], pd.Se
         # NULL ids arrive as NaN in the Arrow batch, and NaN % m != 0
         # evaluates True — a silent fail-open ACK for a message that
         # cannot even be identified.  A missing id is a FAILURE, the same
-        # NULL-is-failure contract route_batch/route_outcomes enforce.
+        # NULL-is-failure contract route_batch enforces.
         return ids.notna() & (ids % failure_mod != 0)
 
     return fn
 
-
-def route_outcomes(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """T2 ack/nack routing (part2/PekkoStreamGenerator.scala:57-89):
-    split processed rows into (ack_df, nack_df).
-
-    NULL verdicts route to nack (no row may vanish between the branches
-    under three-valued logic — same contract as RetryRouter.route_batch)."""
-    ok = F.coalesce(F.col("ok"), F.lit(False))
-    return df.filter(ok), df.filter(~ok)

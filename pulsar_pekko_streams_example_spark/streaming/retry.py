@@ -37,14 +37,8 @@ from pyspark.sql import functions as F
 #: (payload columns ride along WHEN present; the lifecycle columns are the
 #: declared contract, so an empty frontier supports ``select("attempt")`` /
 #: ``select("available_at")`` exactly like a populated one).  ``_batch_id``
-#: is stamped in BOTH layouts — a partition column under the default
-#: idempotent writes, a plain data column on the non-idempotent append path
-#: — so the guarantee is layout-independent (round-10 advice) for ledgers
-#: written entirely by this version.  An append-mode pile that PREDATES the
-#: stamp mixes unstamped and stamped files in one directory; parquet
-#: directory reads do not schema-merge, so read such a pile with
-#: ``option("mergeSchema", "true")`` once (or compact it) to see the column
-#: on every row.
+#: is the ledgers' partition column (one ``_batch_id=N`` directory per
+#: micro-batch).
 FRONTIER_SCHEMA = (
     "message_id string, attempt long, ok boolean, "
     "available_at timestamp, _batch_id int, _redelivered boolean"
@@ -77,7 +71,6 @@ class RetryRouter:
     dlq_path: str
     redelivery_delay_s: int = 10  # PulsarClientWrapper.scala:171
     max_attempts: int = 5
-    idempotent: bool = True
     #: terminal-SUCCESS index for the retry frontier (defaults to
     #: ``<retry_path>-resolved``).  An acked REDELIVERY (attempt > 1) must
     #: stop the redelivery loop the way the broker's ack does — but the
@@ -260,9 +253,8 @@ class RetryRouter:
         # call (a Column-API function costs about 20) is paid per
         # micro-batch.  ``_redelivered`` is transport metadata, not message
         # state: dropped so ledger schemas stay batch-independent (no schema
-        # merge on read).  ``_batch_id`` is declared by FRONTIER_SCHEMA: a
-        # partition directory in the idempotent layout, a data column in
-        # the append layout.
+        # merge on read).  ``_batch_id`` is declared by FRONTIER_SCHEMA as
+        # the partition directory.
         rows = batch.selectExpr(
             *(
                 f"{rewrite[c]} AS {_quote(c)}" if c in rewrite else _quote(c)
@@ -278,9 +270,8 @@ class RetryRouter:
         rows = rows.observe(
             obs, *(F.expr(f"count_if(_outcome = '{k}')").alias(k) for k in self._OUTCOMES)
         )
-        parts = ["_outcome", "_batch_id"] if self.idempotent else ["_outcome"]
         staging = self._route_staging()
-        rows.write.mode("overwrite").partitionBy(*parts).parquet(staging)
+        rows.write.mode("overwrite").partitionBy("_outcome", "_batch_id").parquet(staging)
         n = obs.get
         t2 = time.perf_counter()
         self._land(staging, batch_id)
@@ -302,7 +293,6 @@ class RetryRouter:
         otherwise ``_batch_id=N`` replaces the batch's old partition, which
         moves into the staging first — a REPLAYED batch (crash before the
         offset commit) replaces its own partitions instead of duplicating.
-        The append layout moves the part files (unique per write) instead.
         A crash leaves only the staging as debris, which every lease holder
         discards; the uncommitted batch then replays.  Same-filesystem
         assumption as ``_swap_ledger``."""
@@ -321,14 +311,11 @@ class RetryRouter:
                 continue
             if not os.path.exists(root):
                 os.rename(src, root)
-            elif self.idempotent:
+            else:
                 dst = os.path.join(root, part)
                 if os.path.exists(dst):
                     os.rename(dst, os.path.join(staging, f"replaced-{outcome}"))
                 os.rename(os.path.join(src, part), dst)
-            else:
-                for name in os.listdir(src):
-                    os.rename(os.path.join(src, name), os.path.join(root, name))
 
     # columns whose values change across delivery attempts of the SAME
     # message — excluded from the anonymous-message surrogate id below
@@ -721,15 +708,12 @@ class RetryRouter:
         """Merge old per-micro-batch sink partitions into one archive
         partition — the small-files bound for long-running deployments.
 
-        The idempotent sink layout writes one ``_batch_id=k`` directory per
+        The sink layout writes one ``_batch_id=k`` directory per
         micro-batch; after a million micro-batches the directory listing
         alone dominates read planning.  Batches ``<= up_to_batch_id`` fold
         into the single ``_batch_id=archive_batch_id`` partition (merging
         with any previous archive); newer partitions keep their layout so
-        replay idempotence still holds for them.  Only this partitioned
-        layout folds: a non-idempotent (append) sink carries ``_batch_id``
-        as a data column but has no per-batch directories — the call is a
-        no-op (``archived: 0``) there, by construction not by accident.
+        replay idempotence still holds for them.
 
         SAFETY — derived, not trusted: ``up_to_batch_id`` must be strictly
         below any batch the stream could still replay — an archived batch
@@ -837,8 +821,6 @@ class RetryRouter:
         import json
 
         root = self.sink_path
-        if not os.path.exists(root):
-            return {"archived": 0, "partitions_before": 0, "partitions_after": 0}
         # the lease's self-heal runs before this, so debris here means a
         # PRIOR fold is stuck on a filesystem error (its heal was deferred
         # rather than allowed to fail route_batch/status).  Starting a new
@@ -858,7 +840,7 @@ class RetryRouter:
             )
         parts = self._sink_partitions()
         if not parts:
-            return {"archived": 0}  # non-partitioned layout: nothing to fold
+            return {"archived": 0, "partitions_before": 0, "partitions_after": 0}
         parts_before = len(parts)
         old_ids = sorted(k for k in parts if k <= up_to_batch_id)
         if not old_ids or old_ids == [archive_batch_id]:
@@ -1313,11 +1295,7 @@ class RetryRouter:
                 tmp = path + tag + ".new"
                 shutil.rmtree(tmp, ignore_errors=True)
                 writer = df.write.mode("overwrite")
-                # partition the rewrite ONLY for the idempotent layout: a
-                # non-idempotent ledger appends plain files at the root, and
-                # a partitioned rewrite would leave later appends next to
-                # partition dirs — a mixed layout partition discovery rejects
-                if self.idempotent and "_batch_id" in df.columns:
+                if "_batch_id" in df.columns:
                     writer = writer.partitionBy("_batch_id")
                 writer.parquet(tmp)
                 if os.path.exists(path):

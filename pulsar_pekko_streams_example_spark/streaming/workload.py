@@ -25,6 +25,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from pulsar_pekko_streams_example_spark.streaming.permits import use_pool
+
 
 @dataclass(frozen=True)
 class Workload:
@@ -124,14 +126,14 @@ class WorkloadManager:
         with self._lock:
             if workload.workload_name in self.registry:
                 return False
-            # per-workload FAIR pool — the per-stream dispatcher isolation
-            self.spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", workload.workload_name
-            )
+            # per-workload FAIR pool — the per-stream dispatcher isolation;
+            # the calling thread gets its own pool back afterwards
+            prior = self.spark.sparkContext.getLocalProperty("spark.scheduler.pool")
+            use_pool(self.spark, workload.workload_name)
             try:
                 query = self.stream_factory(workload)
             finally:
-                self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
+                use_pool(self.spark, prior)
             self.registry[workload.workload_name] = query
             return True
 

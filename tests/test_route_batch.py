@@ -178,13 +178,11 @@ def test_crash_debris_is_discarded_by_the_next_lease(spark, tmpdir, monkeypatch)
     assert _ledgers(spark, router) == EXPECTED
 
 
-@pytest.mark.parametrize("idempotent", [True, False])
-def test_ledger_columns_are_pinned(spark, tmpdir, idempotent):
+def test_ledger_columns_are_pinned(spark, tmpdir):
     """One write has one schema: every ledger carries the batch's columns,
     ``available_at`` (NULL outside the retry ledger when the input had
-    none) and ``_batch_id`` — a partition directory in the idempotent
-    layout, a data column in the append layout."""
-    router = _router(tmpdir, idempotent=idempotent)
+    none) and ``_batch_id`` — a partition directory."""
+    router = _router(tmpdir)
     router.route_batch(_batch(spark), batch_id=1)
     want = [
         ("message_id", "string"),
@@ -204,5 +202,3 @@ def test_ledger_columns_are_pinned(spark, tmpdir, idempotent):
             assert all(r.available_at is not None and r.attempt == 2 for r in rows)
         else:
             assert all(r.available_at is None for r in rows)
-        if not idempotent:
-            assert not any(f.startswith("_batch_id=") for f in os.listdir(path))

@@ -546,19 +546,6 @@ def test_engine_metrics_balance_with_null_verdicts(spark, tmpdir):
         M.uninstall(spark, listener)
 
 
-def test_route_outcomes_null_verdict_is_nack(spark):
-    """T2 split conservation: ack ∪ nack must cover every processed row;
-    NULL verdicts go to nack (pre-fix they vanished from both branches)."""
-    from pulsar_pekko_streams_example_spark.streaming.processor import route_outcomes
-
-    df = spark.createDataFrame(
-        [("a", True), ("b", False), ("c", None)], "message_id string, ok boolean"
-    )
-    acks, nacks = route_outcomes(df)
-    assert {r.message_id for r in acks.collect()} == {"a"}
-    assert {r.message_id for r in nacks.collect()} == {"b", "c"}
-
-
 # ---------------------------------------------------------------------------
 # S1 payload decode under poison
 # ---------------------------------------------------------------------------
@@ -1107,6 +1094,36 @@ def test_stop_failure_keeps_query_managed_until_it_succeeds(spark):
     q.fail_stop = False  # broker back → the retry converges
     report = mgr.reconcile(set())
     assert mgr.running() == set() and not report.stop_errors and not q.isActive
+
+
+def test_start_restores_the_callers_scheduler_pool(spark):
+    """``start`` runs the factory in the workload's FAIR pool, then hands
+    the calling thread its OWN pool back: a thread routed to ``ops`` that
+    starts a workload keeps submitting to ``ops`` (pre-fix it was reset to
+    no pool at all).  No Spark job runs."""
+    from types import SimpleNamespace
+
+    from pulsar_pekko_streams_example_spark.streaming.permits import use_pool
+    from pulsar_pekko_streams_example_spark.streaming.workload import (
+        Workload,
+        WorkloadManager,
+    )
+
+    sc = spark.sparkContext
+    seen = []
+
+    def factory(w):
+        seen.append(sc.getLocalProperty("spark.scheduler.pool"))
+        return SimpleNamespace(isActive=False, stop=lambda: None)
+
+    mgr = WorkloadManager(spark=spark, stream_factory=factory)
+    use_pool(spark, "ops")
+    try:
+        assert mgr.start(Workload("pooled", "t"))
+        assert seen == ["pooled"]
+        assert sc.getLocalProperty("spark.scheduler.pool") == "ops"
+    finally:
+        use_pool(spark, None)
 
 
 def test_discovery_loop_survives_transient_tick_failures(spark):
@@ -2191,47 +2208,6 @@ def test_compact_archive_snapshots_are_stamped_per_window(spark, tmpdir):
         ("m-done", 2), ("m-live", 2),
     }
     assert {(m, a) for t, m, a in per_window if t == w2} == {("m-live", 2)}
-
-
-def test_nonidempotent_append_stamps_batch_id_too(spark, tmpdir):
-    """FRONTIER_SCHEMA declares ``_batch_id``; the non-idempotent append
-    path must stamp it as a data column so a downstream
-    ``select("_batch_id")`` works on the POPULATED frontier, not only the
-    empty one (round-10 advice)."""
-    router = _mk_router(tmpdir, idempotent=False)
-    router.route_batch(
-        spark.createDataFrame(
-            [("m1", 1, False), ("m2", 1, True)],
-            "message_id string, attempt long, ok boolean",
-        ),
-        batch_id=7,
-    )
-    ledger = spark.read.parquet(router.retry_path)
-    assert [r["_batch_id"] for r in ledger.select("_batch_id").collect()] == [7]
-    due = router.due_retries(spark, as_of=AS_OF_FUTURE)
-    assert [
-        (r.message_id, r["_batch_id"]) for r in due.select("message_id", "_batch_id").collect()
-    ] == [("m1", 7)]
-    # ledger maintenance keeps the append layout readable (unpartitioned
-    # rewrite + later appends at the root must coexist)
-    assert router.compact(spark)["kept"] == 1
-    router.route_batch(
-        spark.createDataFrame(
-            [("m3", 1, False)], "message_id string, attempt long, ok boolean"
-        ),
-        batch_id=8,
-    )
-    assert {
-        (r.message_id, r["_batch_id"])
-        for r in spark.read.parquet(router.retry_path).select(
-            "message_id", "_batch_id"
-        ).collect()
-    } == {("m1", 7), ("m3", 8)}
-    # the append sink has _batch_id as a DATA column but no per-batch
-    # directories: the partition-scoped fold is a documented no-op there
-    assert router.compact_sink(spark, up_to_batch_id=7, force=True) == {
-        "archived": 0
-    }
 
 
 def test_killed_lease_holder_unblocks_without_manual_cleanup(spark, tmpdir):

@@ -44,8 +44,7 @@ the engine, the CTE is the oracle.  All derivations use plain arithmetic
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from pulsar_pekko_streams_example_spark.sources.tables import load_table
 
@@ -66,86 +65,72 @@ PROCESSING_MS_BAND = 4001  # 1000..5000 ms simulated latency (BASELINE.md)
 TOPIC_PREFIX = "persistent://testing/events/topic-"
 
 
-def _topic_raw() -> Column:
-    return F.concat(
-        F.lit(TOPIC_PREFIX),
-        (F.col("user_id") % TOPIC_DOMAIN).cast("string"),
-        F.when(F.col("event_id") % PARTITION_SUFFIX_MOD == 0, F.lit("-partition-0")).otherwise(F.lit("")),
-    )
+# the name pool as SQL literals, shared by both twins
+_NAMES = ", ".join(f"'{n}'" for n in NAME_POOL)
 
 
-def normalize_topic(col: Column) -> Column:
-    """T5: strip the partition suffix (part3/LimitedMessageProcessor.scala:75)."""
-    return F.regexp_replace(col, r"-partition-\d+$", "")
+_TOPIC_RAW = (
+    f"concat('{TOPIC_PREFIX}', CAST(user_id % {TOPIC_DOMAIN} AS STRING), "
+    f"CASE WHEN event_id % {PARTITION_SUFFIX_MOD} = 0 THEN '-partition-0' ELSE '' END)"
+)
+
+
+def _attempt(n: int, status: str, t: str) -> str:
+    return f"named_struct('attempt', CAST({n} AS BIGINT), 'status', '{status}', 'attempt_time', {t})"
 
 
 def attempts_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The message-attempt ledger (one row per delivery attempt).
 
-    Executed fully JVM-side: projection + explode + two window functions.
-    At scale the windows shuffle once on `key` — the same partitioning the
-    Key_Shared subscription implies, and reusable by every downstream
-    per-key operator.
+    Executed fully JVM-side: projection + two window functions + explode,
+    each a ``selectExpr`` that mirrors the matching step of its
+    ``ENVELOPE_CTE`` twin (SQL strings cost one py4j call per projection;
+    the Column API costs one per sub-expression).  At scale the windows
+    shuffle once on `key` — the same partitioning the Key_Shared
+    subscription implies, and reusable by every downstream per-key
+    operator.
     """
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    base = ev.select(
-        F.col("event_id"),
-        F.col("event_id").cast("string").alias("message_id"),
-        _topic_raw().alias("topic_raw"),
-        normalize_topic(_topic_raw()).alias("topic"),
-        F.concat(F.lit("key-"), F.col("user_id").cast("string")).alias("key"),
-        F.col("ts").alias("publish_time"),
-        (F.col("event_id") % FAILURE_MOD == 0).alias("failed"),
-        (F.lit(1000) + F.col("event_id") % PROCESSING_MS_BAND).alias("processing_ms"),
-        (F.col("event_id") % 100).alias("ack_ms"),
-        F.element_at(
-            F.array(*[F.lit(n) for n in NAME_POOL]),
-            (F.col("event_id") % len(NAME_POOL)).cast("int") + 1,
-        ).alias("name"),
-        F.col("event_type"),
-        F.col("value"),
-        F.col("user_id"),
+    base = load_table(spark, sf_dir, "events").selectExpr(
+        "event_id",
+        "CAST(event_id AS STRING) AS message_id",
+        f"{_TOPIC_RAW} AS topic_raw",
+        # T5: strip the partition suffix (part3/LimitedMessageProcessor.scala:75)
+        rf"regexp_replace({_TOPIC_RAW}, '-partition-\\d+$', '') AS topic",
+        "concat('key-', CAST(user_id AS STRING)) AS key",
+        "ts AS publish_time",
+        f"event_id % {FAILURE_MOD} = 0 AS failed",
+        f"1000 + event_id % {PROCESSING_MS_BAND} AS processing_ms",
+        "event_id % 100 AS ack_ms",
+        f"element_at(array({_NAMES}), CAST(event_id % {len(NAME_POOL)} AS INT) + 1) AS name",
+        "event_type",
+        "value",
+        "user_id",
     )
-
     # Cast window outputs to long: DuckDB's ROW_NUMBER is BIGINT and the
-    # driver's oracle compare includes the schema.
-    w_key = Window.partitionBy("key").orderBy("publish_time", "event_id")
-    w_key_name = Window.partitionBy("key", "name").orderBy("publish_time", "event_id")
-    seqd = base.withColumn("seq", F.row_number().over(w_key).cast("long")).withColumn(
-        "num_publishes", (F.row_number().over(w_key_name) - 1).cast("long")
+    # driver's oracle compare includes the schema.  One projection per
+    # window keeps the physical plan (and tests/test_plan_census.py) as it
+    # was when these were two withColumn calls.
+    seqd = base.selectExpr(
+        "*",
+        "CAST(row_number() OVER (PARTITION BY key ORDER BY publish_time, event_id) AS BIGINT) AS seq",
+    ).selectExpr(
+        "*",
+        "CAST(row_number() OVER (PARTITION BY key, name ORDER BY publish_time, event_id) - 1 "
+        "AS BIGINT) AS num_publishes",
     )
-
     # Expand failures into (failed attempt 1, redelivered success attempt 2):
     # the nack → broker-redelivery loop of part2/PekkoStreamGenerator.scala:77-87.
-    attempt_struct = lambda n, status, t: F.struct(  # noqa: E731
-        F.lit(n).cast("long").alias("attempt"), F.lit(status).alias("status"), t.alias("attempt_time")
-    )
-    redelivered = F.col("publish_time") + F.expr(f"INTERVAL {REDELIVERY_DELAY_S} SECONDS")
-    attempts = seqd.select(
+    attempts = seqd.selectExpr(
         "*",
-        F.explode(
-            F.when(
-                F.col("failed"),
-                F.array(
-                    attempt_struct(1, "failure", F.col("publish_time")),
-                    attempt_struct(2, "success", redelivered),
-                ),
-            ).otherwise(F.array(attempt_struct(1, "success", F.col("publish_time"))))
-        ).alias("a"),
+        f"explode(CASE WHEN failed THEN array({_attempt(1, 'failure', 'publish_time')}, "
+        f"{_attempt(2, 'success', f'publish_time + INTERVAL {REDELIVERY_DELAY_S} SECONDS')}) "
+        f"ELSE array({_attempt(1, 'success', 'publish_time')}) END) AS a",
     )
-    return attempts.select(
+    return attempts.selectExpr(
         "message_id", "event_id", "topic_raw", "topic", "key", "seq", "publish_time",
-        F.col("a.attempt").alias("attempt"),
-        F.col("a.status").alias("status"),
-        F.col("a.attempt_time").alias("attempt_time"),
+        "a.attempt AS attempt", "a.status AS status", "a.attempt_time AS attempt_time",
         "processing_ms", "ack_ms", "name", "num_publishes", "event_type", "value", "user_id",
     )
-
-
-def _sql_name_pool() -> str:
-    return "[" + ", ".join(f"'{n}'" for n in NAME_POOL) + "]"
 
 
 # DuckDB CTE — the oracle twin of attempts_ledger().  Append after "WITH ":
@@ -166,7 +151,7 @@ base AS (
     event_id % {FAILURE_MOD} = 0 AS failed,
     1000 + (event_id % {PROCESSING_MS_BAND}) AS processing_ms,
     event_id % 100 AS ack_ms,
-    list_extract({_sql_name_pool()}, CAST(event_id % {len(NAME_POOL)} AS INT) + 1) AS name,
+    list_extract([{_NAMES}], CAST(event_id % {len(NAME_POOL)} AS INT) + 1) AS name,
     event_type,
     value,
     user_id

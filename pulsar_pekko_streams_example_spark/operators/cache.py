@@ -19,9 +19,12 @@ stages: in a sequential curation run you materialize exactly these (posting
 lists, signatures, verified pair sets) once and fan consumers out from
 them, not re-derive them per query.
 
-Keys embed the dataset directory and the operator parameters, so different
-scale factors or thresholds never collide.  Entries live for the Spark
-application; re-running a query in the same session is a cache read.
+Keys embed the dataset directory, the state of the tables the entry reads
+(``sources.tables.table_state``) and the operator parameters, so different
+scale factors, a table rewritten in place, or different thresholds never
+collide.  Entries live for the Spark application; re-running a query in the
+same session is a cache read.  An entry whose table was rewritten is never
+read again but stays persisted until ``reset``.
 
 **Deliberately NOT wired into the registry queries for corpus-scale
 subtrees.**  Measured on the concurrent FAIR-pool bench at sf0.1

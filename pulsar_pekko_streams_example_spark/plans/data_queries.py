@@ -25,7 +25,7 @@ from pulsar_pekko_streams_example_spark.operators import (
     textstats,
 )
 from pulsar_pekko_streams_example_spark.plans.registry import register
-from pulsar_pekko_streams_example_spark.sources.tables import load_table
+from pulsar_pekko_streams_example_spark.sources.tables import load_table, table_state
 
 JACCARD_THRESHOLD = 0.7
 ANN_K = 5
@@ -94,7 +94,10 @@ def _shared_hot(spark: SparkSession, sf_dir: str):
 
     return shared_df(
         spark,
-        ("hot-shingles", sf_dir, dedup.SHINGLE_N, dedup.JACCARD_MAX_DF),
+        (
+            "hot-shingles", sf_dir, table_state(sf_dir, "documents"),
+            dedup.SHINGLE_N, dedup.JACCARD_MAX_DF,
+        ),
         lambda: dedup.hot_shingles(
             dedup.shingle_postings(load_table(spark, sf_dir, "documents")),
             dedup.JACCARD_MAX_DF,
@@ -117,7 +120,10 @@ def _shared_pairs(spark: SparkSession, sf_dir: str):
 
     return shared_df(
         spark,
-        ("jaccard-pairs", sf_dir, dedup.SHINGLE_N, dedup.JACCARD_MAX_DF, JACCARD_THRESHOLD),
+        (
+            "jaccard-pairs", sf_dir, table_state(sf_dir, "documents"),
+            dedup.SHINGLE_N, dedup.JACCARD_MAX_DF, JACCARD_THRESHOLD,
+        ),
         lambda: dedup.jaccard_pairs(
             load_table(spark, sf_dir, "documents"),
             JACCARD_THRESHOLD,
@@ -136,7 +142,10 @@ def _shared_components(spark: SparkSession, sf_dir: str):
 
     return shared_df(
         spark,
-        ("neardup-cc", sf_dir, dedup.SHINGLE_N, dedup.JACCARD_MAX_DF, JACCARD_THRESHOLD),
+        (
+            "neardup-cc", sf_dir, table_state(sf_dir, "documents"),
+            dedup.SHINGLE_N, dedup.JACCARD_MAX_DF, JACCARD_THRESHOLD,
+        ),
         lambda: graph.connected_components(
             _shared_pairs(spark, sf_dir), src="doc_a", dst="doc_b"
         ),
@@ -232,7 +241,10 @@ def _shared_cooc_edges(spark: SparkSession, sf_dir: str):
 
     return shared_df(
         spark,
-        ("cooc-edges", sf_dir, COOC_SLOT_US, COOC_MIN_SHARED, COOC_MAX_SLOT_USERS),
+        (
+            "cooc-edges", sf_dir, table_state(sf_dir, "events"),
+            COOC_SLOT_US, COOC_MIN_SHARED, COOC_MAX_SLOT_USERS,
+        ),
         build,
     )
 

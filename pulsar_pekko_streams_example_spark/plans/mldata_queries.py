@@ -20,7 +20,7 @@ from pyspark.sql.window import Window
 from pulsar_pekko_streams_example_spark.functions import hashing as H
 from pulsar_pekko_streams_example_spark.operators.partitioning import spread
 from pulsar_pekko_streams_example_spark.plans.registry import register
-from pulsar_pekko_streams_example_spark.sources.tables import load_table
+from pulsar_pekko_streams_example_spark.sources.tables import load_table, table_state
 
 # ---------------------------------------------------------------------------
 # TF-IDF top terms per document (log-free, integer-exact ranking)
@@ -1684,7 +1684,9 @@ def _shared_bpe_chain(
         sym, tops = _bpe_train_chain(words, k)
         return (words, sym, tops)
 
-    return cache.shared_obj(spark, ("bpe_chain", sf_dir, k), build)
+    return cache.shared_obj(
+        spark, ("bpe_chain", sf_dir, table_state(sf_dir, "documents"), k), build
+    )
 
 
 def _bpe_vocab(docs: DataFrame) -> DataFrame:

@@ -104,6 +104,19 @@ def get_spark(
     it: the package's parent directory is added to
     ``spark.executorEnv.PYTHONPATH``, after any value in ``extra_conf``.  The
     driver's own ``PYTHONPATH`` still reaches the workers (Spark appends it).
+
+    ``spark.python.sql.dataFrameDebugging.enabled`` is off (a static conf,
+    so set here and not in ``prepare_session``).  With it on, pyspark wraps
+    every DataFrame and Column call on the driver to record its Python call
+    site in the JVM — ``getActiveSession``, a ``conf.get`` and an origin set
+    and clear, at least four py4j round trips per call, which Spark's own
+    doc string calls "a non-trivial performance overhead".  That was most
+    of the py4j traffic of a registry plan build, and ``route_batch``'s
+    projection paid it on every micro-batch.  What is lost: an analysis or runtime error no longer names
+    the Python line that built the failing expression; its error class and
+    message are unchanged.  A session built elsewhere (a vanilla driver
+    session) keeps pyspark's default, which pyspark reads once per process
+    from the session active at its first DataFrame call.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4
     shuffle = shuffle_partitions or int(cpus)
@@ -121,7 +134,9 @@ def get_spark(
     python_path = [extra.pop("spark.executorEnv.PYTHONPATH", ""), _PACKAGE_ROOT]
     builder = builder.config(
         "spark.executorEnv.PYTHONPATH", os.pathsep.join(p for p in python_path if p)
-    ).config("spark.python.daemon.module", f"{__package__}.worker_daemon")
+    ).config("spark.python.daemon.module", f"{__package__}.worker_daemon").config(
+        "spark.python.sql.dataFrameDebugging.enabled", "false"
+    )
     for k, v in extra.items():
         builder = builder.config(k, v)
     return prepare_session(builder.getOrCreate())

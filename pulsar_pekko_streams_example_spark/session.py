@@ -19,6 +19,15 @@ Scale posture (100 TB target):
   only when it has changed.  The daemon is the package's own module, so every
   Python UDF's worker must be able to import the package: ``get_spark`` puts
   the package's parent directory on the workers' ``PYTHONPATH``.
+- Local files go through the engine's Hadoop file system (``jvm/``, a jar
+  shipped with the package).  Without libhadoop, which this Spark build's
+  JVM does not load, Hadoop's stock local file system forks ``chmod`` for
+  every file, checksum file and directory it creates and ``readlink`` on
+  every ``FileContext`` rename: 2 ``chmod`` and 8 ``readlink`` per
+  checkpoint file, so tens of forks per plain micro-batch and about 150 per
+  ordered one.  The engine's classes do both in-process; the files on disk
+  are the same (same mode bits, same ``.crc`` checksums).  Only ``get_spark``
+  sessions use them: a session built elsewhere keeps Hadoop's stock classes.
 """
 
 from __future__ import annotations
@@ -29,6 +38,13 @@ from pyspark.sql import SparkSession
 
 # the directory the package is imported from, for the Python workers
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# the engine's local file system (built from the .java sources beside it)
+_ENGINE_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "engine-fs.jar")
+_ENGINE_FS_CONFS = {
+    "spark.hadoop.fs.file.impl": "sparkgraft.fs.EngineLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "sparkgraft.fs.EngineLocalFs",
+}
 
 # Runtime-settable confs applied to ANY session we are handed (the driver
 # constructs its own SparkSession for verification, so these must not rely on
@@ -117,6 +133,22 @@ def get_spark(
     message are unchanged.  A session built elsewhere (a vanilla driver
     session) keeps pyspark's default, which pyspark reads once per process
     from the session active at its first DataFrame call.
+
+    ``file:`` paths go through the engine's local file system: the jar in
+    ``jvm/`` is added to ``spark.driver.extraClassPath`` (after any value in
+    ``extra_conf``), and ``spark.hadoop.fs.file.impl`` and
+    ``spark.hadoop.fs.AbstractFileSystem.file.impl`` name its classes.
+    Without libhadoop, Hadoop's stock local file system forks a ``chmod``
+    per file, checksum file and directory it creates and a ``readlink`` per
+    link-status lookup (several per ``FileContext`` rename, which every
+    checkpoint and state-store file goes through); the engine's classes
+    make the same calls in-process and leave the same files, modes and
+    ``.crc`` checksums on disk.  These are JVM-launch confs, so they are
+    set here and not in ``prepare_session``: a session built elsewhere
+    keeps Hadoop's stock file system.  When this process already holds a
+    JVM launched without the jar (a vanilla session came first, or
+    ``spark-submit`` launched the driver JVM before Python ran), the class
+    cannot load there and the file-system confs are left out.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4
     shuffle = shuffle_partitions or int(cpus)
@@ -137,6 +169,34 @@ def get_spark(
     ).config("spark.python.daemon.module", f"{__package__}.worker_daemon").config(
         "spark.python.sql.dataFrameDebugging.enabled", "false"
     )
+    class_path = [extra.pop("spark.driver.extraClassPath", ""), _ENGINE_FS_JAR]
+    builder = builder.config(
+        "spark.driver.extraClassPath", os.pathsep.join(p for p in class_path if p)
+    )
+    if _engine_fs_loads():
+        for k, v in _ENGINE_FS_CONFS.items():
+            builder = builder.config(k, v)
     for k, v in extra.items():
         builder = builder.config(k, v)
     return prepare_session(builder.getOrCreate())
+
+
+def _engine_fs_loads() -> bool:
+    """Whether the engine's file-system classes load in this process's JVM:
+    always in a JVM the builder is about to launch (the jar is on its class
+    path), and in a running one only if it was launched with the jar.  A JVM
+    runs before the first context when ``spark-submit`` started it and left
+    its gateway port in the environment; pyspark attaches to that one."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark import SparkContext
+
+    if SparkContext._jvm is None:
+        if "PYSPARK_GATEWAY_PORT" not in os.environ:
+            return True
+        SparkContext._ensure_initialized()  # attaches; launches nothing
+    jvm = SparkContext._jvm
+    try:
+        jvm.java.lang.Class.forName(_ENGINE_FS_CONFS["spark.hadoop.fs.file.impl"])
+    except Py4JJavaError:  # ClassNotFoundException
+        return False
+    return True

@@ -5,11 +5,12 @@ Reference: ``MultipleWorkloadsExample`` (part3/MultipleWorkloadsExample.scala:17
 tasks (:111-113); 19 seeded messages visibly queue behind the permits.
 
 Spark twin: permits = FAIR scheduler pools + per-source admission
-(streaming/permits.py).  The global cap becomes the cluster's task-slot
-budget; per-workload pools keep one workload from starving another.  The
-permit *ledger* remains queryable — the `permit_running_max` registry query
-proves the running count never exceeds the cap, which is this example's
-log-asserted invariant made SQL.
+(streaming/permits.py).  The reference's 5 permits become the session's task
+slots — its core count, fixed when the session is built (``local[N]``), so
+Spark never runs more than N tasks at once; per-workload pools keep one
+workload from starving another.  The permit *ledger* remains queryable — the
+`permit_running_max` registry query proves the running count never exceeds
+the cap, which is this example's log-asserted invariant made SQL.
 """
 
 from __future__ import annotations
@@ -32,11 +33,10 @@ from pulsar_pekko_streams_example_spark.streaming.workload import (
 )
 
 WORKLOADS = ("informational", "transactional", "billing")  # :171-173
-GLOBAL_PERMITS = 5  # :111
 
 
 def run(spark: SparkSession, base: str) -> dict:
-    cfg = PermitConfig(global_permit_limit=GLOBAL_PERMITS, max_tasks_queued=20)
+    cfg = PermitConfig(max_tasks_queued=20)
     confs = fair_scheduler_confs(cfg)
     assert confs["spark.scheduler.mode"] == "FAIR"
     admission = admission_options(cfg)

@@ -57,7 +57,28 @@ from pyspark.storagelevel import StorageLevel
 
 _REGISTRY_LOCK = threading.Lock()
 _BUILT: dict[tuple, DataFrame] = {}
+_BUILT_OBJ: dict[tuple, object] = {}
 _BUILDING: dict[tuple, threading.Lock] = {}
+
+
+def _memoize(
+    store: dict, full_key: tuple, lock_key: tuple, build: Callable[[], object]
+) -> object:
+    """``store[full_key]``, built by ``build()`` on first use under the
+    per-key lock ``_BUILDING[lock_key]``: concurrent callers of one key wait
+    for one build instead of racing, distinct keys build concurrently."""
+    with _REGISTRY_LOCK:
+        if full_key in store:
+            return store[full_key]
+        key_lock = _BUILDING.setdefault(lock_key, threading.Lock())
+    with key_lock:
+        with _REGISTRY_LOCK:
+            if full_key in store:
+                return store[full_key]
+        value = build()
+        with _REGISTRY_LOCK:
+            store[full_key] = value
+    return value
 
 
 def shared_df(
@@ -72,21 +93,13 @@ def shared_df(
     to compute the same partitions.  Distinct keys build concurrently.
     """
     full_key = (spark.sparkContext.applicationId,) + key
-    with _REGISTRY_LOCK:
-        df = _BUILT.get(full_key)
-        if df is not None:
-            return df
-        key_lock = _BUILDING.setdefault(full_key, threading.Lock())
-    with key_lock:
-        with _REGISTRY_LOCK:
-            df = _BUILT.get(full_key)
-            if df is not None:
-                return df
+
+    def materialize() -> DataFrame:
         df = build().persist(StorageLevel.MEMORY_AND_DISK)
         df.count()  # materialize eagerly so waiting queries reuse, not race
-        with _REGISTRY_LOCK:
-            _BUILT[full_key] = df
-    return df
+        return df
+
+    return _memoize(_BUILT, full_key, full_key, materialize)
 
 
 def shared_obj(
@@ -106,21 +119,7 @@ def shared_obj(
     ContextCleaner once unreferenced, which is fine — entries here are
     vocab-bounded, not corpus-sized."""
     full_key = (spark.sparkContext.applicationId,) + key
-    with _REGISTRY_LOCK:
-        if full_key in _BUILT_OBJ:
-            return _BUILT_OBJ[full_key]
-        key_lock = _BUILDING.setdefault(("obj",) + full_key, threading.Lock())
-    with key_lock:
-        with _REGISTRY_LOCK:
-            if full_key in _BUILT_OBJ:
-                return _BUILT_OBJ[full_key]
-        obj = build()
-        with _REGISTRY_LOCK:
-            _BUILT_OBJ[full_key] = obj
-    return obj
-
-
-_BUILT_OBJ: dict[tuple, object] = {}
+    return _memoize(_BUILT_OBJ, full_key, ("obj",) + full_key, build)
 
 
 def reset(spark: SparkSession) -> None:

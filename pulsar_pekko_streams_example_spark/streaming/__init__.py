@@ -1,5 +1,4 @@
 from pulsar_pekko_streams_example_spark.streaming.processor import (
-    ProcessorResult,
     apply_processor,
     simulated_processor,
 )
@@ -18,7 +17,6 @@ from pulsar_pekko_streams_example_spark.streaming.workload import (
 __all__ = [
     "MetricsListener",
     "with_engine_metrics",
-    "ProcessorResult",
     "apply_processor",
     "simulated_processor",
     "RetryRouter",

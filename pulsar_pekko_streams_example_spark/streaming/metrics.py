@@ -27,7 +27,7 @@ OBSERVATION_NAME = "engine_metrics"
 GUARD_OBSERVATION_NAME = "event_time_guard"
 
 
-def with_engine_metrics(df: DataFrame, name: str = OBSERVATION_NAME) -> DataFrame:
+def with_engine_metrics(df: DataFrame) -> DataFrame:
     """Attach the SingleStreamCollector counter set to any DataFrame carrying
     an ``ok`` column: processed / successes / failures per batch.
 
@@ -39,7 +39,7 @@ def with_engine_metrics(df: DataFrame, name: str = OBSERVATION_NAME) -> DataFram
     processed, every batch."""
     ok = F.coalesce(F.col("ok"), F.lit(False))
     return df.observe(
-        name,
+        OBSERVATION_NAME,
         F.count(F.lit(1)).alias("processed"),
         F.count(F.when(ok, 1)).alias("successes"),
         F.count(F.when(~ok, 1)).alias("failures"),
@@ -51,10 +51,10 @@ class MetricsListener(StreamingQueryListener):
     """Collects per-micro-batch observed metrics (the logging collector
     analog; swap the list for a metrics backend in production)."""
 
-    rows: list = field(default_factory=list)
-    guard_rows: list = field(default_factory=list)
-    malformed: list = field(default_factory=list)
-    _lock: threading.Lock = field(default_factory=threading.Lock)
+    rows: list = field(default_factory=list, init=False)
+    guard_rows: list = field(default_factory=list, init=False)
+    malformed: list = field(default_factory=list, init=False)
+    _lock: threading.Lock = field(default_factory=threading.Lock, init=False)
 
     def onQueryStarted(self, event) -> None:  # noqa: N802
         pass

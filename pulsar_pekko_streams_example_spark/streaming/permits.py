@@ -9,8 +9,10 @@ concurrent offers; per-stream caps compose on top
 Spark-first: concurrency is the scheduler's job, so the permit system becomes
 configuration + admission, not a custom executor:
 
-- the GLOBAL cap is the executor core budget (``local[N]`` / cluster cores):
-  Spark never runs more than that many tasks — exactly the permit invariant;
+- the GLOBAL cap is the executor core budget, fixed when the session is
+  built (``get_spark(cpus=N)`` → ``local[N]``, or the cluster's cores):
+  Spark never runs more than that many tasks — exactly the permit invariant,
+  so it is a session setting, not a field here;
 - FAIR scheduler pools give per-workload weights/minShares (a busy workload
   queues instead of starving others) — the reference's queue smoothing;
 - per-source admission (``maxOffsetsPerTrigger``/``maxFilesPerTrigger``
@@ -35,22 +37,23 @@ from pyspark.sql import SparkSession
 class PermitConfig:
     """BASELINE.md envelope: globalPermitLimit 5/20, queue 20.
 
-    The reference's third knob — ``maxTasksWaiting``, the bound on offers
-    BLOCKED awaiting queue space (``part3/PermittedTaskExecutor.scala``'s
-    bounded concurrent offers) — has no field here BY CONSTRUCTION: a
-    pull-based micro-batch source never offers, so there is nothing to
-    block.  The backlog stays in the broker/files (L11 admission), and the
-    two bounds that exist in this model are the core budget
-    (``global_permit_limit``) and per-trigger admission
-    (``max_tasks_queued``).  A config field that no code reads would be a
-    silently ignored knob, which is worse than an honest absence.
+    The reference's ``globalPermitLimit`` has no field here: the global cap
+    is the session's core count, fixed when the session is built
+    (``get_spark(cpus=N)``, ``local[N]``).  Its third knob —
+    ``maxTasksWaiting``, the bound on offers BLOCKED awaiting queue space
+    (``part3/PermittedTaskExecutor.scala``'s bounded concurrent offers) —
+    has none BY CONSTRUCTION: a pull-based micro-batch source never offers,
+    so there is nothing to block.  The backlog stays in the broker/files
+    (L11 admission), and the two bounds that exist in this model are the
+    core budget and per-trigger admission (``max_tasks_queued``).  A config
+    field that no code reads would be a silently ignored knob, which is
+    worse than an honest absence.
 
     ``pools`` gives per-workload FAIR pools real weights/minShares
     (name, weight, minShare): a pool named in ``use_pool`` but not listed
     here gets Spark's built-ins (weight 1, minShare 0, FIFO internally),
     which protects nothing — list the workloads that must not starve."""
 
-    global_permit_limit: int = 20
     max_tasks_queued: int = 20
     pools: tuple[tuple[str, int, int], ...] = ()
 
@@ -69,13 +72,13 @@ def _fair_scheduler_xml(config: PermitConfig) -> str:
 
 
 def fair_scheduler_confs(config: PermitConfig) -> dict[str, str]:
-    """Builder-time confs implementing the global cap + fair sharing.
+    """Builder-time confs for fair sharing under the global cap.
 
-    The permit limit maps to the core budget: tasks beyond it queue in the
-    scheduler exactly like the reference's Source.queue backlog.  Each
-    ``config.pools`` entry is rendered into the allocation file, so
-    ``use_pool(spark, name)`` routes to a pool with the declared
-    weight/minShare instead of Spark's protect-nothing defaults.
+    The permit limit is the core budget the session was built with: tasks
+    beyond it queue in the scheduler exactly like the reference's
+    Source.queue backlog.  Each ``config.pools`` entry is rendered into the
+    allocation file, so ``use_pool(spark, name)`` routes to a pool with the
+    declared weight/minShare instead of Spark's protect-nothing defaults.
     """
     xml = tempfile.NamedTemporaryFile(
         "w", suffix=".xml", prefix="fairscheduler", delete=False
@@ -88,7 +91,8 @@ def fair_scheduler_confs(config: PermitConfig) -> dict[str, str]:
     return {
         "spark.scheduler.mode": "FAIR",
         "spark.scheduler.allocation.file": xml.name,
-        # local mode: local[N] with N = global_permit_limit IS the permit cap
+        # the permit cap is the session's core count (local[N]), fixed
+        # when the session is built
     }
 
 

@@ -9,8 +9,9 @@ bounded-parallel unordered completion (``mapAsyncUnordered``,
 Spark-first shape: the user supplies a *vectorized* function
 ``pandas.DataFrame -> pandas.Series[bool]`` (or raises); we wrap it in
 mapInPandas so each Arrow batch is one "async chunk", exceptions are captured
-per-batch into ``(ok, error)`` columns, and parallelism is task parallelism —
-Spark's default unordered completion matches mapAsyncUnordered semantics.
+per-batch into ``(ok, error)`` columns (the ``ProcessingResult`` analog), and
+parallelism is task parallelism — Spark's default unordered completion matches
+mapAsyncUnordered semantics.
 Pure column-expression processors should skip this and use plain
 ``withColumn`` (the fast path; stays in codegen).
 """
@@ -18,7 +19,6 @@ Pure column-expression processors should skip this and use plain
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
-from dataclasses import dataclass
 
 import numpy as _np
 import pandas as pd
@@ -27,29 +27,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
 
-@dataclass(frozen=True)
-class ProcessorResult:
-    """ProcessingResult ADT analog (util/StandardTestTools.scala:9-14):
-    ok=True ⇒ ProcessSuccess, else ProcessFailure(error)."""
-
-    ok: bool
-    error: str | None = None
-
-
 def apply_processor(
-    df: DataFrame,
-    fn: Callable[[pd.DataFrame], pd.Series],
-    parallelism: int | None = None,
+    df: DataFrame, fn: Callable[[pd.DataFrame], pd.Series]
 ) -> DataFrame:
     """Run a user processor over every row, capturing failures as data.
 
     Adds ``ok: boolean`` and ``error: string`` columns (the ProcessedMessage
-    envelope, util/StandardTestTools.scala:28-31).  ``parallelism`` maps the
-    reference's StreamParallelism.processingParallelism to a repartition —
-    omit to keep the upstream partitioning (usually right at scale).
+    envelope, util/StandardTestTools.scala:28-31): ``ok=True`` is
+    ProcessSuccess, else ProcessFailure(error)
+    (util/StandardTestTools.scala:9-14).
     """
-    if parallelism:
-        df = df.repartition(parallelism)
     # a REPROCESSED frontier (due_retries output) already carries ok/error
     # from its last attempt; those verdicts are stale by definition — this
     # call exists to re-decide them.  Drop them before appending: the

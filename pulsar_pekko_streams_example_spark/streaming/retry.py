@@ -71,15 +71,6 @@ class RetryRouter:
     dlq_path: str
     redelivery_delay_s: int = 10  # PulsarClientWrapper.scala:171
     max_attempts: int = 5
-    #: terminal-SUCCESS index for the retry frontier (defaults to
-    #: ``<retry_path>-resolved``).  An acked REDELIVERY (attempt > 1) must
-    #: stop the redelivery loop the way the broker's ack does — but the
-    #: retry ledger is append-only and the sink is the full traffic, far
-    #: too big to anti-join on every frontier scan.  Only messages that
-    #: previously FAILED can ever be in the frontier, so recording just the
-    #: attempt>1 acks keeps the exclusion index bounded by the failure
-    #: rate, like the DLQ.
-    resolved_path: str = ""
     #: how long ``route_batch`` and the maintenance ops wait for the ledger
     #: lease before failing cleanly (see ``_lease``)
     lease_timeout_s: float = 60.0
@@ -93,6 +84,7 @@ class RetryRouter:
         default_factory=lambda: {
             "batches": 0, "acks": 0, "retries": 0, "dlq": 0, "resolved": 0,
         },
+        init=False,
         repr=False,
         compare=False,
     )
@@ -102,15 +94,23 @@ class RetryRouter:
         default_factory=lambda: dict.fromkeys(
             ("calls", "lease_wait_ms", "write_ms", "land_ms"), 0
         ),
+        init=False,
         repr=False,
         compare=False,
     )
     _counters_lock: threading.Lock = field(
-        default_factory=threading.Lock, repr=False, compare=False
+        default_factory=threading.Lock, init=False, repr=False, compare=False
     )
 
     def _resolved(self) -> str:
-        return self.resolved_path or self.retry_path + "-resolved"
+        """The terminal-SUCCESS index for the retry frontier.  An acked
+        REDELIVERY (attempt > 1) must stop the redelivery loop the way the
+        broker's ack does — but the retry ledger is append-only and the sink
+        is the full traffic, far too big to anti-join on every frontier
+        scan.  Only messages that previously FAILED can ever be in the
+        frontier, so recording just the attempt>1 acks keeps this index
+        bounded by the failure rate, like the DLQ."""
+        return self.retry_path + "-resolved"
 
     def _lease_path(self) -> str:
         return self.retry_path + ".lease"
@@ -204,8 +204,13 @@ class RetryRouter:
         between calls it exists only as crash debris."""
         return self.retry_path + ".route"
 
-    def route_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
+    def route_batch(self, batch: DataFrame, batch_id: int) -> None:
         """foreachBatch body: one call per micro-batch, one Spark job.
+
+        ``batch_id`` names the batch's ``_batch_id=N`` ledger partitions,
+        and a call with an id already landed REPLACES that batch (replay
+        safety).  So it has no default: two direct calls sharing one id
+        would silently discard the first call's rows.
 
         NULL-safe delivery accounting (round-8 streaming sweep): a naive
         ``filter(ok)`` / ``filter(~ok)`` split LOSES rows whose ``ok`` is

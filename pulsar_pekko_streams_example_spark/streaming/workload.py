@@ -38,16 +38,18 @@ class Workload:
     and every nameless workload would collide), so construction fails closed
     (round-9 control-plane sweep).
 
-    Duplicate names with CONFLICTING configs in one requested set collapse
-    by equality-by-name — first inserted wins (Python set semantics, pinned
-    by test) — the same collapse the reference's case-class equality
-    produces in its Set[Workload].
+    Duplicate names with CONFLICTING configs in one requested set (say, two
+    different ``topic``s) collapse by equality-by-name — first inserted wins
+    (Python set semantics, pinned by test) — the same collapse the
+    reference's case-class equality produces in its Set[Workload].
+
+    The reference's per-stream ``StreamParallelism`` has no field here:
+    a stream's parallelism is its source partitioning (bounded by
+    ``maxFilesPerTrigger`` admission) on the session's task slots.
     """
 
     workload_name: str
     topic: str  # source identifier (path/topic)
-    processing_parallelism: int = 5
-    ack_parallelism: int = 5
     ordered: bool = False
 
     def __post_init__(self) -> None:
@@ -97,13 +99,13 @@ class WorkloadManager:
 
     spark: SparkSession
     stream_factory: StreamFactory
-    registry: dict[str, StreamingQuery] = field(default_factory=dict)
-    discovery_errors: list[str] = field(default_factory=list)
-    _lock: threading.Lock = field(default_factory=threading.Lock)
+    registry: dict[str, StreamingQuery] = field(default_factory=dict, init=False)
+    discovery_errors: list[str] = field(default_factory=list, init=False)
+    _lock: threading.Lock = field(default_factory=threading.Lock, init=False)
     #: the live discovery loop, if any — run_discovery_loop is start-once
     #: while it is alive (the reference's ``started`` AtomicBoolean)
     _discovery_thread: threading.Thread | None = field(
-        default=None, repr=False, compare=False
+        default=None, init=False, repr=False, compare=False
     )
 
     def running(self) -> set[str]:
@@ -137,8 +139,9 @@ class WorkloadManager:
             self.registry[workload.workload_name] = query
             return True
 
-    def stop(self, workload_name: str, drain: bool = True) -> bool:
-        """L2 + L6 graceful shutdown: drain in-flight work, then stop.
+    def stop(self, workload_name: str) -> bool:
+        """L2 + L6 graceful shutdown: drain in-flight work, then stop —
+        always, like the reference's ``drainAndShutdown``.
 
         If ``query.stop()`` itself fails, the query is RE-REGISTERED before
         the error propagates: popping it and then losing the stop would
@@ -161,7 +164,7 @@ class WorkloadManager:
             query = self.registry.pop(workload_name, None)
         if query is None:
             return False
-        if drain and query.isActive:
+        if query.isActive:
             try:
                 query.processAllAvailable()  # complete() + drain analog
             except Exception:

@@ -246,7 +246,7 @@ def test_workload_manager_lifecycle(spark):
 
 
 def test_permit_confs(spark):
-    cfg = PermitConfig(global_permit_limit=5, max_tasks_queued=20)
+    cfg = PermitConfig(max_tasks_queued=20)
     confs = fair_scheduler_confs(cfg)
     assert confs["spark.scheduler.mode"] == "FAIR"
     assert os.path.exists(confs["spark.scheduler.allocation.file"])
@@ -416,6 +416,25 @@ def test_idempotent_batch_replay(spark, tmpdir):
     retry = spark.read.parquet(router.retry_path)
     assert retry.count() == 5 * 2
     assert retry.agg(F.min("attempt")).collect()[0][0] == 2
+
+
+def test_route_batch_requires_a_batch_id(spark, tmpdir):
+    """A batch id already landed is REPLACED (replay safety), so a default
+    id would let two direct calls that both omit it overwrite each other:
+    routing [a, b] then [c] with one shared id left 3 acks counted and only
+    c in the sink.  Omitting the id must fail before anything lands."""
+    router = RetryRouter(
+        sink_path=os.path.join(tmpdir, "sink"),
+        retry_path=os.path.join(tmpdir, "retry"),
+        dlq_path=os.path.join(tmpdir, "dlq"),
+    )
+    batch = spark.createDataFrame(
+        [("a", 1, True)], "message_id string, attempt long, ok boolean"
+    )
+    with pytest.raises(TypeError):
+        router.route_batch(batch)
+    assert not os.path.exists(router.sink_path)
+    assert router.counters["batches"] == 0
 
 
 def test_stream_stream_interval_join(spark, tmpdir):

@@ -1031,11 +1031,11 @@ def test_workload_conflicting_duplicates_collapse_first_wins():
     part4/WorkloadManagementService.scala:122-124)."""
     from pulsar_pekko_streams_example_spark.streaming.workload import Workload
 
-    a5 = Workload("a", "t", processing_parallelism=5)
-    a9 = Workload("a", "t", processing_parallelism=9)
-    assert a5 == a9 and len({a5, a9}) == 1
-    assert next(iter({a5, a9})).processing_parallelism == 5
-    assert next(iter({a9, a5})).processing_parallelism == 9
+    a1 = Workload("a", "t1")
+    a2 = Workload("a", "t2")
+    assert a1 == a2 and len({a1, a2}) == 1
+    assert next(iter({a1, a2})).topic == "t1"
+    assert next(iter({a2, a1})).topic == "t2"
 
 
 def test_reconcile_isolates_poisoned_factory(spark):

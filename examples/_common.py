@@ -7,12 +7,6 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-ENVELOPE_SCHEMA = (
-    "message_id string, event_id long, topic string, key string, seq long, "
-    "attempt long, status string, publish_time timestamp"
-)
-
-
 def seed_messages(
     spark: SparkSession, n: int, keys: int = 4, topic: str = "persistent://testing/examples/topic-0"
 ) -> DataFrame:

@@ -4,13 +4,17 @@ Reference: ``MultipleWorkloadsExample`` (part3/MultipleWorkloadsExample.scala:17
 — three workloads share a ``PermittedTaskExecutor`` capped at 5 concurrent
 tasks (:111-113); 19 seeded messages visibly queue behind the permits.
 
-Spark twin: permits = FAIR scheduler pools + per-source admission
+Spark twin: permits = the session's task slots + per-source admission
 (streaming/permits.py).  The reference's 5 permits become the session's task
 slots — its core count, fixed when the session is built (``local[N]``), so
-Spark never runs more than N tasks at once; per-workload pools keep one
-workload from starving another.  The permit *ledger* remains queryable — the
-`permit_running_max` registry query proves the running count never exceeds
-the cap, which is this example's log-asserted invariant made SQL.
+Spark never runs more than N tasks at once.  Per-workload FAIR pools keep one
+workload from starving another only in a session BUILT with
+``fair_scheduler_confs`` (scheduler confs are read at session build, so pass
+them as ``get_spark(extra_conf=...)``, as ``perfbench/wl_tenants.py`` does);
+this example runs in the caller's session, which keeps its FIFO scheduler.
+The permit *ledger* remains queryable — the `permit_running_max` registry
+query proves the running count never exceeds the cap, which is this
+example's log-asserted invariant made SQL.
 """
 
 from __future__ import annotations
@@ -25,7 +29,6 @@ from pulsar_pekko_streams_example_spark.sources.streams import envelope_file_str
 from pulsar_pekko_streams_example_spark.streaming.permits import (
     PermitConfig,
     admission_options,
-    fair_scheduler_confs,
 )
 from pulsar_pekko_streams_example_spark.streaming.workload import (
     Workload,
@@ -36,10 +39,7 @@ WORKLOADS = ("informational", "transactional", "billing")  # :171-173
 
 
 def run(spark: SparkSession, base: str) -> dict:
-    cfg = PermitConfig(max_tasks_queued=20)
-    confs = fair_scheduler_confs(cfg)
-    assert confs["spark.scheduler.mode"] == "FAIR"
-    admission = admission_options(cfg)
+    admission = admission_options(PermitConfig(max_tasks_queued=20))
 
     sinks: dict[str, str] = {}
 

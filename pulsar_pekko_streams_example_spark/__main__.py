@@ -50,9 +50,17 @@ def cmd_run(args: argparse.Namespace) -> int:
 
 
 def cmd_explain(args: argparse.Namespace) -> int:
+    import textwrap
+
     all_queries()
-    df = REGISTRY[args.name].build(_spark(), args.sf_dir)
-    df.explain("formatted")
+    spec = REGISTRY[args.name]
+    print(
+        textwrap.fill(
+            f"{args.name}: {spec.doc}", 79, break_long_words=False, break_on_hyphens=False
+        ),
+        end="\n\n",
+    )
+    spec.build(_spark(), args.sf_dir).explain("formatted")
     return 0
 
 
@@ -112,7 +120,9 @@ def main(argv: list[str] | None = None) -> int:
     sp.add_argument("--show", type=int, default=20)
     sp.set_defaults(fn=cmd_run)
 
-    sp = sub.add_parser("explain", help="print the formatted physical plan")
+    sp = sub.add_parser(
+        "explain", help="print the query's doc and its formatted physical plan"
+    )
     sp.add_argument("name")
     sp.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
     sp.set_defaults(fn=cmd_explain)

@@ -24,7 +24,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -34,6 +34,7 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
+from pulsar_pekko_streams_example_spark.functions.numeric import dsum
 from pulsar_pekko_streams_example_spark.operators.partitioning import spread
 
 # Left-fold dot product, identical fold order in both dialects (DuckDB twin
@@ -151,10 +152,7 @@ def hyperplane_signature(emb: str, dialect: str) -> str:
     )
 
 
-def signature_bands(emb: DataFrame) -> DataFrame:
-    """(vec_id, band, val): 4×4-bit bands of the 16-bit hyperplane signature —
-    the shared coarse quantizer for near-dup and bucketed ANN."""
-    emb = spread(emb)
+def _signature_bands(emb: DataFrame) -> DataFrame:
     sig = emb.select(
         "vec_id",
         F.expr(hyperplane_signature("embedding", "spark")).alias("sig"),
@@ -174,6 +172,83 @@ def signature_bands(emb: DataFrame) -> DataFrame:
     ).select("vec_id", F.col("bv.band"), F.col("bv.val"))
 
 
+def signature_bands(emb: DataFrame) -> DataFrame:
+    """(vec_id, band, val): 4×4-bit bands of the 16-bit hyperplane signature —
+    the shared coarse quantizer for near-dup and bucketed ANN."""
+    return _signature_bands(spread(emb))
+
+
+# --- Search stages ----------------------------------------------------------
+#
+# Every search below is a composition of the private stages in this file.
+# A public entry point spreads its input once; a stage takes the frame that
+# was already spread and never spreads again.
+
+# Exact cosine of a (qe, qn) query against a (ne, nn) neighbor.
+_PAIR_COS = safe_cos(DOT.format(a="qe", b="ne"), "qn * nn", "spark")
+
+
+def _normed(emb: DataFrame) -> DataFrame:
+    """(vec_id, embedding, nrm): the non-NULL corpus with its norms.  A fully
+    NULL embedding takes part in nothing; a NULL element makes ``nrm`` NULL.
+    Stages that never read ``nrm`` leave it to column pruning."""
+    return emb.filter(F.col("embedding").isNotNull()).select(
+        "vec_id", "embedding", F.expr(_norm("embedding")).alias("nrm")
+    )
+
+
+def _queries(rows: DataFrame) -> DataFrame:
+    """(query_id, qe, qn) from ``_normed`` rows."""
+    return rows.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qe"),
+        F.col("nrm").alias("qn"),
+    )
+
+
+def _neighbors(rows: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, neighbor_id, ne, nn) from ``_normed`` rows."""
+    return rows.select(
+        *keep,
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("ne"),
+        F.col("nrm").alias("nn"),
+    )
+
+
+def _top_k(scored: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """(query_id, neighbor_id, score, rnk): the top-k tail every search ends
+    in — ``row_number`` per query by (cosine DESC, neighbor_id), or by
+    (adc_dist ASC NULLS LAST, neighbor_id): an all-excluded (±Inf) code sums
+    to NULL and ranks last, identically in both engines.  The rows are
+    distinct on (query_id, neighbor_id), which ann_method_recall_matrix's
+    single-pass count relies on."""
+    order = F.col(score).desc() if score == "cosine" else F.col(score).asc_nulls_last()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", "neighbor_id", score, "rnk")
+    )
+
+
+def _rerank(short: DataFrame, base: DataFrame, query_filter: str, k: int) -> DataFrame:
+    """The exact re-rank (IVFADC+R, Jégou et al. TPAMI 2011 §V): only the
+    (query_id, neighbor_id) shortlist rejoins its embeddings from ``base``,
+    and the exact cosine ranks it to the final top-``k`` — queries × r full
+    vectors, never a second corpus-scan shape.  Any true top-k neighbor that
+    survives the shortlist is guaranteed into the refined top-k (at most k-1
+    vectors beat it globally), so refined recall@k >= the shortlist's.
+    Cosine is the total contract of ``cosine_topk`` (NULL-element dot -> -1)."""
+    rescored = (
+        short.select("query_id", "neighbor_id")
+        .join(_neighbors(base), ["neighbor_id"])
+        .join(F.broadcast(_queries(base.filter(F.expr(query_filter)))), ["query_id"])
+        .withColumn("cosine", F.coalesce(F.expr(_PAIR_COS), F.lit(-1.0)))
+    )
+    return _top_k(rescored, k)
+
+
 def ann_lsh_topk(
     emb: DataFrame, query_filter: str, k: int, bands: DataFrame | None = None
 ) -> DataFrame:
@@ -186,7 +261,7 @@ def ann_lsh_topk(
     signature bands (operators/cache.py) — the same quantizer feeds
     embedding near-dup, so one signature pass serves both."""
     emb = spread(emb)
-    bands = bands if bands is not None else signature_bands(emb)
+    bands = bands if bands is not None else _signature_bands(emb)
     qb = bands.filter(F.expr(query_filter)).alias("q")
     cb = bands.alias("c")
     cand = (
@@ -202,33 +277,13 @@ def ann_lsh_topk(
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    base = emb.filter(F.col("embedding").isNotNull()).select(
-        "vec_id", "embedding", F.expr(_norm("embedding")).alias("nrm")
-    )
-    qe = base.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    ne = base.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        F.col("nrm").alias("nn"),
-    )
+    base = _normed(emb)
     scored = (
-        cand.join(qe, ["query_id"])
-        .join(ne, ["neighbor_id"])
-        .withColumn(
-            "cosine",
-            F.expr(safe_cos(DOT.format(a="qe", b="ne"), "qn * nn", "spark")),
-        )
+        cand.join(_queries(base), ["query_id"])
+        .join(_neighbors(base), ["neighbor_id"])
+        .withColumn("cosine", F.expr(_PAIR_COS))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
+    return _top_k(scored, k)
 
 
 _PAIR_COS_SCHEMA = StructType(
@@ -330,7 +385,7 @@ def scored_candidate_pairs(
     emb = spread(emb)
     # candidate generation shuffles (band, val, vec_id) only — the embedding
     # arrays re-attach AFTER pair dedup, so the wide columns never fan out
-    bands = bands if bands is not None else signature_bands(emb)
+    bands = bands if bands is not None else _signature_bands(emb)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -349,9 +404,7 @@ def scored_candidate_pairs(
     # sqrt of the self-dot fold) — the boolean costs no extra fold and lets
     # the Python side keep NULL-cosine and NaN→-1 distinct (Arrow collapses
     # NULL elements to NaN inside float64 batches).
-    base = emb.filter(F.col("embedding").isNotNull()).select(
-        "vec_id", "embedding", F.expr(_norm("embedding")).alias("nrm")
-    )
+    base = _normed(emb)
     ea = base.select(
         F.col("vec_id").alias("vec_a"),
         F.col("embedding").alias("ea"),
@@ -446,6 +499,18 @@ def embedding_near_dup(
     )
 
 
+
+def _cosine_topk(emb: DataFrame, query_filter: str, k: int) -> DataFrame:
+    base = _normed(emb)
+    scored = (
+        _neighbors(base)
+        .crossJoin(F.broadcast(_queries(base.filter(F.expr(query_filter)))))
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("cosine", F.coalesce(F.expr(_PAIR_COS), F.lit(-1.0)))
+    )
+    return _top_k(scored, k)
+
+
 def cosine_topk(emb: DataFrame, query_filter: str, k: int) -> DataFrame:
     """Brute-force cosine top-k: queries × corpus via broadcast nested-loop,
     declarative dot products, rank window per query.
@@ -454,34 +519,7 @@ def cosine_topk(emb: DataFrame, query_filter: str, k: int) -> DataFrame:
     NULL embeddings are excluded on BOTH sides; a NULL *element* makes the
     dot fold NULL, coalesced to cosine -1 — the numpy path cannot represent
     NULL (NaN → -1 there), so all three formulations must score it -1."""
-    emb = spread(emb).filter(F.col("embedding").isNotNull())
-    q = emb.filter(F.expr(query_filter)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.expr(_norm("embedding")).alias("qn"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        F.expr(_norm("embedding")).alias("nn"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.coalesce(
-                F.expr(safe_cos(DOT.format(a="qe", b="ne"), "qn * nn", "spark")),
-                F.lit(-1.0),
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
+    return _cosine_topk(spread(emb), query_filter, k)
 
 
 _TOPK_SCHEMA = StructType(
@@ -657,12 +695,7 @@ def cosine_topk_numpy(
         .select("vec_id", "embedding")
         .mapInPandas(part_topk, _TOPK_SCHEMA)
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        partial.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
+    return _top_k(partial, k)
 
 
 # --- PQ (product-quantization) ANN with ADC scoring -------------------------
@@ -676,7 +709,7 @@ def cosine_topk_numpy(
 # table of query-subvector→centroid distances, and a vector's approximate
 # distance is M table lookups summed over its code.
 #
-# Deterministic codebook, same posture as the IVF quantizer above:
+# Deterministic codebook, same posture as the IVF quantizer below:
 # centroid j of every subspace is the j-th strided corpus vector's
 # subvector (production trains per-subspace k-means on a sample; a pure
 # function of the data keeps the DuckDB oracle bit-identical).
@@ -721,6 +754,115 @@ def sqdist(a: str, b: str, dialect: str) -> str:
     )
 
 
+def pq_subdist(a: str, b: str, dialect: str) -> str:
+    """The guarded PQ sub-distance: ``sqdist(a, b)`` with a NULL/NaN result
+    (NULL element, NaN component, ragged pair) replaced by the in-envelope
+    sentinel 1e30 — a deterministic worst rank in BOTH engines, evaluated
+    so that the fold itself runs once per row.  ±Inf survives: it orders
+    the same way in both, and the decimal ADC accumulator excludes it
+    identically in both."""
+    d = sqdist(a, b, dialect)
+    s = f"CAST({PQ_SENTINEL} AS DOUBLE)"
+    if dialect == "spark":
+        return f"coalesce(nanvl({d}, {s}), {s})"
+    return f"coalesce(CASE WHEN isnan({d}) THEN {s} ELSE ({d}) END, {s})"
+
+
+def _sub(vec: str, m: str = "m") -> str:
+    """The m-th PQ sub-vector of array column ``vec``."""
+    return f"slice({vec}, {m} * {PQ_SUBDIM} + 1, {PQ_SUBDIM})"
+
+
+def _pq_seeds(rows: DataFrame, *cols) -> DataFrame:
+    """(j, *cols) of the strided PQ codebook: entry j is the row with vec_id
+    PQ_CENT_OFFSET + j·PQ_CENT_STRIDE.  The seeds are picked AFTER the
+    non-NULL filter, so a NULL-embedding seed leaves a hole at its j in both
+    engines (``pq_codebook_census`` reports it)."""
+    return rows.filter(
+        (F.col("vec_id") < PQ_CENT_STRIDE * PQ_CODEBOOK)
+        & (F.col("vec_id") % PQ_CENT_STRIDE == PQ_CENT_OFFSET)
+    ).select(
+        ((F.col("vec_id") - PQ_CENT_OFFSET) / PQ_CENT_STRIDE).cast("long").alias("j"),
+        *cols,
+    )
+
+
+def _pq_table(rows: DataFrame, cb: DataFrame, vec: str, *keys: str) -> DataFrame:
+    """(*keys, m, j, d): guarded sub-distance of the m-th sub-vector of every
+    row's ``vec`` to the m-th sub-vector of codebook entry (j, cbe), for
+    every subspace m.  The codebook broadcasts (K rows); this map-side
+    scoring is the only wide pass, O(rows · M · K · subdim)."""
+    return (
+        rows.crossJoin(F.broadcast(cb))
+        .select(
+            *keys,
+            "j",
+            vec,
+            "cbe",
+            F.explode(F.expr(f"sequence(0, {PQ_M - 1})")).alias("m"),
+        )
+        .select(
+            *keys,
+            F.col("m").cast("long").alias("m"),
+            "j",
+            F.expr(pq_subdist(_sub(vec), _sub("cbe"), "spark")).alias("d"),
+        )
+    )
+
+
+def _pq_sub_table(rows: DataFrame, cb: DataFrame) -> DataFrame:
+    """(vec_id, m, j, d): ``_pq_table`` against a per-subspace (m, j, cbe)
+    codebook whose entries are already sub-vectors (M × K rows)."""
+    return rows.crossJoin(F.broadcast(cb)).select(
+        "vec_id", "m", "j", F.expr(pq_subdist(_sub("embedding"), "cbe", "spark")).alias("d")
+    )
+
+
+def _argmin(table: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, m, code): the nearest codebook entry per subspace — one hash
+    aggregate of min(struct(d, j)) with map-side partials; ties break to
+    the smaller entry id, the order the oracle's ROW_NUMBER pins."""
+    return (
+        table.groupBy(*keys, "m")
+        .agg(F.min(F.struct(F.col("d"), F.col("j"))).alias("mn"))
+        .select(*keys, "m", F.col("mn.j").alias("code"))
+    )
+
+
+def _pq_encode(base: DataFrame, table, query_filter: str):
+    """(codes, tables): every vector's (neighbor_id, m, code) PQ code and
+    every query's (query_id, m, code, d) ADC lookup table, both from the
+    one distance-table function ``table`` (rows -> (vec_id, m, j, d)), so
+    the two sides are bit-identical by construction.  The query side
+    filters BEFORE scoring: only the query rows meet the codebook again."""
+    codes = _argmin(table(base), "vec_id").withColumnRenamed("vec_id", "neighbor_id")
+    tables = table(base.filter(F.expr(query_filter))).select(
+        F.col("vec_id").alias("query_id"), "m", F.col("j").alias("code"), "d"
+    )
+    return codes, tables
+
+
+def _strided_pq(base: DataFrame, query_filter: str):
+    """``_pq_encode`` over the strided raw-vector codebook."""
+    cb = _pq_seeds(base, F.col("embedding").alias("cbe"))
+    return _pq_encode(
+        base, lambda rows: _pq_table(rows, cb, "embedding", "vec_id"), query_filter
+    )
+
+
+def _adc(codes: DataFrame, tables: DataFrame, on: list[str]) -> DataFrame:
+    """(query_id, neighbor_id, adc_dist): ADC scoring — the codes stream once
+    through an equi-join on ``on`` against the BROADCAST query tables, and
+    the distance is one decimal-exact hash aggregate of the looked-up
+    sub-distances.  No corpus embedding is touched."""
+    return (
+        codes.join(F.broadcast(tables), on)
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .groupBy("query_id", "neighbor_id")
+        .agg(dsum("d").alias("adc_dist"))
+    )
+
+
 def pq_distance_table(emb: DataFrame, row_filter: str | None = None) -> DataFrame:
     """(vec_id, m, j, d): guarded squared L2 distance of every vector's
     m-th subvector to centroid j of subspace m.
@@ -732,50 +874,18 @@ def pq_distance_table(emb: DataFrame, row_filter: str | None = None) -> DataFram
     wide pass is this map-side scoring, O(corpus · M · K · subdim) — at a
     real deployment the codes are computed once at ingest and materialized
     (operators/cache.py posture), so query-time cost never touches this.
-
-    Guard: a NULL/NaN subdistance (NULL element, NaN component) becomes the
-    in-envelope sentinel 1e30 — deterministic worst-rank in BOTH engines
-    (evaluated via nanvl/coalesce so the fold itself runs once per row).
-    ±Inf survives: IEEE-consistent ordering either way, and the decimal ADC
-    accumulator excludes it identically in both engines.
+    NULL/NaN subdistances take the sentinel (``pq_subdist``).
 
     ``row_filter`` restricts WHICH vectors get distance rows (the codebook
     always derives from the full corpus): the query-side table needs only
     the query vectors, and without the pushdown the plan would score the
     whole corpus against the codebook a second time just to keep 1% of the
-    rows (the two consumers share no materialization — each builds its own
-    subtree)."""
-    emb = spread(emb)
-    base = emb.filter(F.col("embedding").isNotNull()).select("vec_id", "embedding")
-    cent = base.filter(
-        (F.col("vec_id") < PQ_CENT_STRIDE * PQ_CODEBOOK)
-        & (F.col("vec_id") % PQ_CENT_STRIDE == PQ_CENT_OFFSET)
-    ).select(
-        ((F.col("vec_id") - PQ_CENT_OFFSET) / PQ_CENT_STRIDE)
-        .cast("long")
-        .alias("j"),
-        F.col("embedding").alias("ce"),
-    )
+    rows."""
+    base = _normed(spread(emb))
+    cb = _pq_seeds(base, F.col("embedding").alias("cbe"))
     if row_filter is not None:
         base = base.filter(F.expr(row_filter))
-    sub_v = f"slice(embedding, m * {PQ_SUBDIM} + 1, {PQ_SUBDIM})"
-    sub_c = f"slice(ce, m * {PQ_SUBDIM} + 1, {PQ_SUBDIM})"
-    d = sqdist(sub_v, sub_c, "spark")
-    guarded = (
-        f"coalesce(nanvl({d}, CAST({PQ_SENTINEL} AS DOUBLE)), "
-        f"CAST({PQ_SENTINEL} AS DOUBLE))"
-    )
-    return (
-        base.crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "j",
-            "embedding",
-            "ce",
-            F.explode(F.expr(f"sequence(0, {PQ_M - 1})")).alias("m"),
-        )
-        .select("vec_id", F.col("m").cast("long").alias("m"), "j", F.expr(guarded).alias("d"))
-    )
+    return _pq_table(base, cb, "embedding", "vec_id")
 
 
 def pq_codebook_census(emb: DataFrame) -> dict:
@@ -791,20 +901,8 @@ def pq_codebook_census(emb: DataFrame) -> dict:
     ``n_centroids < PQ_CODEBOOK // 2``, the threshold the operator test
     pins on the test corpus.  One metadata-cheap job over < STRIDE·K rows
     of the corpus head; never part of a query plan."""
-    cent_js = (
-        spread(emb)
-        .filter(F.col("embedding").isNotNull())
-        .filter(
-            (F.col("vec_id") < PQ_CENT_STRIDE * PQ_CODEBOOK)
-            & (F.col("vec_id") % PQ_CENT_STRIDE == PQ_CENT_OFFSET)
-        )
-        .select(
-            ((F.col("vec_id") - PQ_CENT_OFFSET) / PQ_CENT_STRIDE)
-            .cast("long")
-            .alias("j")
-        )
-    )
-    present = {r["j"] for r in cent_js.collect()}  # <= PQ_CODEBOOK scalars
+    seeds = _pq_seeds(spread(emb).filter(F.col("embedding").isNotNull()))
+    present = {r["j"] for r in seeds.collect()}  # <= PQ_CODEBOOK scalars
     return {
         "n_centroids": len(present),
         "missing_j": sorted(set(range(PQ_CODEBOOK)) - present),
@@ -813,14 +911,13 @@ def pq_codebook_census(emb: DataFrame) -> dict:
 
 def pq_codes(dtable: DataFrame) -> DataFrame:
     """(vec_id, m, code): each vector's nearest centroid per subspace —
-    the M-byte PQ code, as one hash aggregate of min(struct(d, j)) with
-    map-side partials (ties break to the smaller centroid id, the same
-    order the oracle's ROW_NUMBER pins)."""
-    return (
-        dtable.groupBy("vec_id", "m")
-        .agg(F.min(F.struct(F.col("d"), F.col("j"))).alias("mn"))
-        .select("vec_id", "m", F.col("mn.j").alias("code"))
-    )
+    the M-byte PQ code of a ``pq_distance_table``."""
+    return _argmin(dtable, "vec_id")
+
+
+def _pq_adc(emb: DataFrame, query_filter: str, k: int) -> DataFrame:
+    codes, tables = _strided_pq(_normed(emb), query_filter)
+    return _top_k(_adc(codes, tables, ["m", "code"]), k, "adc_dist")
 
 
 def ann_pq_adc_topk(emb: DataFrame, query_filter: str, k: int) -> DataFrame:
@@ -835,33 +932,8 @@ def ann_pq_adc_topk(emb: DataFrame, query_filter: str, k: int) -> DataFrame:
     pairwise join ever materializes subvectors.  Quantization error (ADC
     distance ≈ true distance) is the operator's contract — the oracle
     replicates the deterministic strided codebook, the argmin tie-break,
-    and the decimal-exact ADC sum, so results match bit-for-bit.  Rank by
-    (adc_dist ASC NULLS LAST, neighbor_id): an all-excluded (±Inf) code
-    sums to NULL and ranks last, identically in both engines."""
-    from pulsar_pekko_streams_example_spark.functions.numeric import dsum
-
-    codes = pq_codes(pq_distance_table(emb))
-    qdt = pq_distance_table(emb, row_filter=query_filter).select(
-        F.col("vec_id").alias("query_id"),
-        "m",
-        F.col("j").alias("code"),
-        "d",
-    )
-    scored = (
-        codes.withColumnRenamed("vec_id", "neighbor_id")
-        .join(F.broadcast(qdt), ["m", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(dsum("d").alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc_nulls_last(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "adc_dist", "rnk")
-    )
+    and the decimal-exact ADC sum, so results match bit-for-bit."""
+    return _pq_adc(spread(emb), query_filter, k)
 
 
 def ann_pq_refine_topk(
@@ -870,52 +942,10 @@ def ann_pq_refine_topk(
     """PQ/ADC + refine (the IVFADC+R shape, Jégou et al. TPAMI 2011 §V):
     the compressed-domain ADC pass shortlists ``r`` candidates per query,
     then ONLY those r rejoin their full embeddings for an exact-cosine
-    re-rank to the final top-``k``.
-
-    The standard accuracy/IO trade at 100 TB: the corpus-wide scan stays in
-    the 8-byte-code domain (ann_pq_adc_topk's contract), and the refine
-    stage touches r full vectors per query — an equi-join of the
-    (queries x r)-row shortlist against the embedding store, never a second
-    corpus scan shape.  Any true top-k neighbor that survives the shortlist
-    is guaranteed into the refined top-k (at most k-1 vectors beat it
-    globally), so refined recall@k >= ADC recall@k — pinned.  Cosine is the
-    shared fold + safe_cos total contract (NULL-element dot -> -1, same as
-    cosine_topk) so ranks are deterministic on hostile corpora."""
-    short = ann_pq_adc_topk(emb, query_filter, r).select(
-        "query_id", "neighbor_id"
-    )
-    base = emb.filter(F.col("embedding").isNotNull()).select(
-        "vec_id", "embedding", F.expr(_norm("embedding")).alias("nrm")
-    )
-    q = base.filter(F.expr(query_filter)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    n = base.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        F.col("nrm").alias("nn"),
-    )
-    rescored = (
-        short.join(n, ["neighbor_id"])
-        .join(F.broadcast(q), ["query_id"])
-        .withColumn(
-            "cosine",
-            F.coalesce(
-                F.expr(safe_cos(DOT.format(a="qe", b="ne"), "qn * nn", "spark")),
-                F.lit(-1.0),
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
+    re-rank to the final top-``k`` (``_rerank``), so refined recall@k >=
+    ADC recall@k — pinned.  The re-rank reads the embeddings as given, not
+    the spread copy the ADC pass scans."""
+    return _rerank(_pq_adc(spread(emb), query_filter, r), _normed(emb), query_filter, k)
 
 
 # --- IVF (inverted-file) ANN -----------------------------------------------
@@ -930,32 +960,70 @@ IVF_CENT_STRIDE = 64
 IVF_CENT_OFFSET = 7
 IVF_NPROBE = 2
 
+# The trained variant runs IVF_TRAIN_ROUNDS unrolled Lloyd's iterations
+# (operators/clustering.py — broadcast assign, exact DECIMAL component sums,
+# k x d shuffle per round) from the SAME strided seeds, so the recall delta
+# in ann_method_recall_matrix is attributable to training alone, and the
+# DuckDB oracle replicates every round bit-for-bit (deterministic seeds +
+# safe_cos assignment + exact decimal means — the kmeans_round2_movement
+# machinery).  Production would train on a hash sample with more rounds;
+# the dataflow is identical.
+IVF_TRAIN_ROUNDS = 2
 
-def ivf_assignments(emb: DataFrame) -> DataFrame:
-    """(vec_id, cent_id): each vector's nearest centroid by cosine.
 
-    The centroid table broadcasts (it is corpus/STRIDE rows — at a real
-    deployment, O(sqrt(corpus)) trained centroids), so scoring is a map-only
-    pass over the embeddings; the argmax collapses to ONE hash aggregate of
-    max(struct(csim, -cent_id)) with map-side partials — the only shuffle
-    carries a single row per vector, never the score matrix."""
-    base = emb.filter(F.col("embedding").isNotNull()).select(
-        "vec_id", "embedding", F.expr(_norm("embedding")).alias("nrm")
-    )
-    cent = base.filter(
-        (F.col("vec_id") % IVF_CENT_STRIDE) == IVF_CENT_OFFSET
-    ).select(
+def _strided_cent(base: DataFrame) -> DataFrame:
+    """(cent_id, ce, cn): the strided coarse quantizer over ``_normed`` rows."""
+    return base.filter((F.col("vec_id") % IVF_CENT_STRIDE) == IVF_CENT_OFFSET).select(
         F.col("vec_id").alias("cent_id"),
         F.col("embedding").alias("ce"),
         F.col("nrm").alias("cn"),
     )
-    scored = base.crossJoin(F.broadcast(cent)).select(
+
+
+def _trained_cent(emb: DataFrame, rounds: int) -> DataFrame:
+    """(cent_id, ce, cn): the Lloyd's-trained coarse quantizer, seeded from
+    the strided centroids.  Each round is a broadcast-assign map pass plus
+    ONE k x d-row shuffle (exact decimal component sums); clusters that lose
+    every member simply drop out, deterministically in both engines."""
+    from pulsar_pekko_streams_example_spark.operators import clustering
+
+    cents = _strided_cent(_normed(emb)).select(
+        F.col("cent_id").alias("cluster_id"), F.col("ce").alias("centroid")
+    )
+    for _ in range(rounds):
+        assigned = clustering.assign(emb, cents)
+        cents = clustering.centroids_from_sums(clustering.update_sums(assigned))
+    return cents.select(
+        # coalesce to the unreachable -1: cluster_id is the training argmax
+        # pick, and a nullable key here lets a downstream equi-join push
+        # isnotnull(<whole assign fold>) INTO the training crossJoin,
+        # re-evaluating the fold per row as a join residual (the
+        # dup_span_coverage lesson; plan-audited).  The oracle's trained
+        # centroid CTE carries the same coalesce.
+        F.coalesce(F.col("cluster_id"), F.lit(-1)).alias("cent_id"),
+        F.col("centroid").alias("ce"),
+        F.expr(_norm("centroid")).alias("cn"),
+    )
+
+
+def _cent_scores(base: DataFrame, cent: DataFrame) -> DataFrame:
+    """(vec_id, cent_id, csim): every row of ``base`` scored against the
+    BROADCAST centroid table (corpus/STRIDE rows here, O(sqrt(corpus))
+    trained centroids at a real deployment) — a map-only pass."""
+    return base.crossJoin(F.broadcast(cent)).select(
         "vec_id",
         "cent_id",
-        (
-            F.expr(safe_cos(DOT.format(a="embedding", b="ce"), "nrm * cn", "spark"))
-        ).alias("csim"),
+        F.expr(safe_cos(DOT.format(a="embedding", b="ce"), "nrm * cn", "spark")).alias(
+            "csim"
+        ),
     )
+
+
+def _home(scored: DataFrame) -> DataFrame:
+    """(vec_id, cent_id): each vector's home centroid, the argmax of its
+    scores with ties to the lower cent_id — ONE hash aggregate of
+    max(struct(csim, -cent_id)) with map-side partials, so the only shuffle
+    carries a single row per vector, never the score matrix."""
     return (
         scored.groupBy("vec_id")
         .agg(
@@ -967,100 +1035,62 @@ def ivf_assignments(emb: DataFrame) -> DataFrame:
     )
 
 
-def ann_ivfadc_topk(
-    emb: DataFrame, query_filter: str, k: int, nprobe: int = None
-) -> DataFrame:
-    """IVF + PQ composed (the IVFADC index structure, Jégou et al. TPAMI
-    2011 §VI, without residual encoding): vectors live in nearest-centroid
-    inverted lists AS PQ CODES; a query probes its ``nprobe`` closest lists
-    and ADC-scores ONLY those lists' codes against its distance table.
-
-    THE production shape for billion-scale ANN — both reductions at once:
-    IVF cuts the candidate set to ~corpus·nprobe/C (an equi-join on
-    cent_id, lists partitioned by centroid), and PQ keeps the scan in the
-    8-byte code domain (scoring = M broadcast-table lookups, no corpus
-    embedding is ever touched at query time).  The scoring join carries
-    (cent_id, m, code) against the broadcast (query, probe-list, table)
-    rows; the ADC sum is one decimal-exact hash aggregate.  Residuals are
-    deliberately NOT encoded (codes quantize raw vectors) so the codebook
-    stays the deterministic strided one the DuckDB oracle replicates
-    bit-for-bit; the structure — probe, then compressed-domain score — is
-    exactly IVFADC's.  Rank by (adc_dist ASC NULLS LAST, neighbor_id),
-    the ann_pq_adc_topk contract."""
-    from pulsar_pekko_streams_example_spark.functions.numeric import dsum
-
-    nprobe = IVF_NPROBE if nprobe is None else nprobe
-    emb = spread(emb)
-    codes = pq_codes(pq_distance_table(emb))
-    lists = ivf_assignments(emb).withColumnRenamed("vec_id", "neighbor_id")
-    coded_lists = codes.withColumnRenamed("vec_id", "neighbor_id").join(
-        lists, ["neighbor_id"]
-    )
-    probes = ivf_probe_ranks(emb, query_filter).filter(
-        F.col("pr") <= nprobe
-    ).select("query_id", "cent_id")
-    qdt = pq_distance_table(emb, row_filter=query_filter).select(
-        F.col("vec_id").alias("query_id"),
-        "m",
-        F.col("j").alias("code"),
-        "d",
-    )
-    # one broadcast carries (query, probed list, subspace, code, d): the
-    # big side streams codes once, filtered to probed lists by the join
-    probe_tables = probes.join(qdt, ["query_id"])
-    scored = (
-        coded_lists.join(F.broadcast(probe_tables), ["cent_id", "m", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(dsum("d").alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc_nulls_last(), F.col("neighbor_id")
-    )
+def _probe_ranks(scored: DataFrame, query_filter: str) -> DataFrame:
+    """(query_id, cent_id, pr): every centroid ranked per query by (csim
+    DESC, cent_id).  The query filter pushes below the centroid cross join,
+    so this pass is |queries| x |centroids| — never corpus-sized."""
+    wq = Window.partitionBy("query_id").orderBy(F.col("csim").desc(), F.col("cent_id"))
     return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "adc_dist", "rnk")
+        scored.filter(F.expr(query_filter))
+        .select(F.col("vec_id").alias("query_id"), "cent_id", "csim")
+        .withColumn("pr", F.row_number().over(wq).cast("long"))
+        .select("query_id", "cent_id", "pr")
     )
+
+
+def _probes(scored: DataFrame, query_filter: str, nprobe: int) -> DataFrame:
+    """(query_id, cent_id): each query's ``nprobe`` closest lists."""
+    return (
+        _probe_ranks(scored, query_filter)
+        .filter(F.col("pr") <= nprobe)
+        .select("query_id", "cent_id")
+    )
+
+
+def ivf_assignments(emb: DataFrame) -> DataFrame:
+    """(vec_id, cent_id): each vector's nearest strided centroid by cosine."""
+    base = _normed(spread(emb))
+    return _home(_cent_scores(base, _strided_cent(base)))
 
 
 def ivf_probe_ranks(emb: DataFrame, query_filter: str) -> DataFrame:
-    """(query_id, cent_id, pr): EVERY centroid ranked per query by cosine —
-    the full probe ordering of which ``ann_ivf_topk`` takes the first
-    ``nprobe``.  Feeds the recall ledger (ann_ivf_recall_report): the probe
-    rank of an exact neighbor's home centroid tells you the smallest nprobe
-    that would have found it.
+    """(query_id, cent_id, pr): EVERY strided centroid ranked per query by
+    cosine — the full probe ordering of which ``ann_ivf_topk`` takes the
+    first ``nprobe``.  The probe rank of an exact neighbor's home centroid
+    is the smallest nprobe that would have found it."""
+    base = _normed(spread(emb))
+    return _probe_ranks(_cent_scores(base, _strided_cent(base)), query_filter)
 
-    Queries filter BEFORE the centroid cross join, so the scoring pass is
-    |queries| x |centroids| — never corpus-sized; the rank window partitions
-    by query over <= |centroids| rows."""
-    base = emb.filter(F.col("embedding").isNotNull()).select(
-        "vec_id", "embedding", F.expr(_norm("embedding")).alias("nrm")
+
+def _ivf_search(
+    base: DataFrame, cent: DataFrame, query_filter: str, k: int, nprobe: int
+) -> DataFrame:
+    """IVF search against the coarse quantizer ``cent``: assignment and
+    probing read one centroid scoring (the probe side re-scores only the
+    query rows), the probed lists join on cent_id, and their vectors are
+    re-scored by exact cosine."""
+    scored = _cent_scores(base, cent)
+    lists = _neighbors(_home(scored).join(base, "vec_id"), "cent_id")
+    # assignment is unique per vector, so (query, neighbor) pairs are already
+    # distinct — no dedup shuffle needed after the list join
+    rescored = (
+        _probes(scored, query_filter, nprobe)
+        .join(lists, "cent_id")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .join(F.broadcast(_queries(base.filter(F.expr(query_filter)))), "query_id")
+        .withColumn("cosine", F.expr(_PAIR_COS))
     )
-    cent = base.filter(
-        (F.col("vec_id") % IVF_CENT_STRIDE) == IVF_CENT_OFFSET
-    ).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    scored = (
-        base.filter(F.expr(query_filter))
-        .crossJoin(F.broadcast(cent))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "cent_id",
-            F.expr(
-                safe_cos(DOT.format(a="embedding", b="ce"), "nrm * cn", "spark")
-            ).alias("csim"),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("csim").desc(), F.col("cent_id")
-    )
-    return scored.withColumn("pr", F.row_number().over(wq).cast("long")).select(
-        "query_id", "cent_id", "pr"
-    )
+    return _top_k(rescored, k)
 
 
 def ann_ivf_topk(
@@ -1075,121 +1105,8 @@ def ann_ivf_topk(
     inverted lists that are partitioned by cent_id.  Recall < 100% is the
     contract (the oracle replicates the quantizer and probing exactly);
     returned scores/ranks are exact cosine."""
-    emb = spread(emb)
-    base = emb.filter(F.col("embedding").isNotNull()).select(
-        "vec_id", "embedding", F.expr(_norm("embedding")).alias("nrm")
-    )
-    cent = base.filter(
-        (F.col("vec_id") % IVF_CENT_STRIDE) == IVF_CENT_OFFSET
-    ).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    return _ivf_topk_from_cent(base, cent, query_filter, k, nprobe)
-
-
-def _ivf_topk_from_cent(
-    base: DataFrame, cent: DataFrame, query_filter: str, k: int, nprobe: int
-) -> DataFrame:
-    """IVF search against an EXPLICIT coarse quantizer: ``base`` is the
-    non-NULL (vec_id, embedding, nrm) corpus, ``cent`` the (cent_id, ce, cn)
-    centroid table (broadcastable by construction — O(sqrt(corpus)) rows at
-    a real deployment).  Shared by the strided quantizer (``ann_ivf_topk``)
-    and the Lloyd's-trained one (``ann_ivf_trained_topk``): assignment and
-    probing both ride ONE broadcast scoring pass; lists join on cent_id."""
-    scored = base.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "cent_id",
-        (
-            F.expr(safe_cos(DOT.format(a="embedding", b="ce"), "nrm * cn", "spark"))
-        ).alias("csim"),
-    )
-    assign = (
-        scored.groupBy("vec_id")
-        .agg(
-            F.max(
-                F.struct(F.col("csim").alias("csim"), (-F.col("cent_id")).alias("neg"))
-            ).alias("m")
-        )
-        .select("vec_id", (-F.col("m.neg")).alias("cent_id"))
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("csim").desc(), F.col("cent_id"))
-    probes = (
-        scored.filter(F.expr(query_filter))
-        .select(F.col("vec_id").alias("query_id"), "cent_id", "csim")
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", "cent_id")
-    )
-    lists = assign.join(base, "vec_id").select(
-        "cent_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        F.col("nrm").alias("nn"),
-    )
-    q = base.filter(F.expr(query_filter)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    # assignment is unique per vector, so (query, neighbor) pairs are already
-    # distinct — no dedup shuffle needed after the list join
-    rescored = (
-        probes.join(lists, "cent_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .join(F.broadcast(q), "query_id")
-        .withColumn(
-            "cosine",
-            F.expr(safe_cos(DOT.format(a="qe", b="ne"), "qn * nn", "spark")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        rescored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
-
-
-# --- Trained IVF coarse quantizer (VERDICT r15 task 1) -----------------------
-#
-# The strided quantizer above keeps the DuckDB oracle bit-exact but leaves
-# recall on the table: strided "centroids" are arbitrary corpus vectors, not
-# cluster centers.  The trained variant runs IVF_TRAIN_ROUNDS unrolled
-# Lloyd's iterations (operators/clustering.py — broadcast assign, exact
-# DECIMAL component sums, k x d shuffle per round) from the SAME strided
-# seeds, so the recall delta in ann_method_recall_matrix is attributable to
-# training alone, and the DuckDB oracle replicates every round bit-for-bit
-# (deterministic seeds + safe_cos assignment + exact decimal means — the
-# kmeans_round2_movement machinery, already oracle-proven).  Production
-# would train on a hash sample with more rounds; the dataflow is identical.
-
-IVF_TRAIN_ROUNDS = 2
-
-
-def trained_ivf_centroids(
-    emb: DataFrame, rounds: int = IVF_TRAIN_ROUNDS
-) -> DataFrame:
-    """(cluster_id, centroid): Lloyd's-trained coarse quantizer, seeded from
-    the strided corpus rows.  Each round is a broadcast-assign map pass plus
-    ONE k x d-row shuffle (exact decimal component sums); clusters that lose
-    every member simply drop out, deterministically in both engines."""
-    from pulsar_pekko_streams_example_spark.operators import clustering
-
-    emb = spread(emb)
-    cents = (
-        emb.filter(F.col("embedding").isNotNull())
-        .filter((F.col("vec_id") % IVF_CENT_STRIDE) == IVF_CENT_OFFSET)
-        .select(
-            F.col("vec_id").alias("cluster_id"),
-            F.col("embedding").alias("centroid"),
-        )
-    )
-    for _ in range(rounds):
-        assigned = clustering.assign(emb, cents)
-        cents = clustering.centroids_from_sums(clustering.update_sums(assigned))
-    return cents
+    base = _normed(spread(emb))
+    return _ivf_search(base, _strided_cent(base), query_filter, k, nprobe)
 
 
 def ann_ivf_trained_topk(
@@ -1200,29 +1117,67 @@ def ann_ivf_trained_topk(
     rounds: int = IVF_TRAIN_ROUNDS,
 ) -> DataFrame:
     """IVF ANN over the Lloyd's-TRAINED coarse quantizer: identical search
-    dataflow to ``ann_ivf_topk`` (broadcast centroid scoring, cent_id
-    equi-join lists, exact-cosine re-rank), only the quantizer differs.
-    Same-k recall >= the strided quantizer's on clustered corpora is the
-    point, and is what ann_method_recall_matrix's ivf_trained row measures."""
+    dataflow to ``ann_ivf_topk``, only the quantizer differs.  Same-k recall
+    >= the strided quantizer's on clustered corpora is the point, and is
+    what ann_method_recall_matrix's ivf_trained row measures."""
     emb = spread(emb)
-    base = emb.filter(F.col("embedding").isNotNull()).select(
-        "vec_id", "embedding", F.expr(_norm("embedding")).alias("nrm")
-    )
-    cent = trained_ivf_centroids(emb, rounds).select(
-        # coalesce to the unreachable -1: cluster_id is the training
-        # argmax pick, and a nullable key here lets a downstream equi-join
-        # push isnotnull(<whole assign fold>) INTO the training crossJoin,
-        # re-evaluating the fold per row as a join residual (the
-        # dup_span_coverage lesson; plan-audited).  Oracle twins carry the
-        # same coalesce in lockstep.
-        F.coalesce(F.col("cluster_id"), F.lit(-1)).alias("cent_id"),
-        F.col("centroid").alias("ce"),
-        F.expr(_norm("centroid")).alias("cn"),
-    )
-    return _ivf_topk_from_cent(base, cent, query_filter, k, nprobe)
+    return _ivf_search(_normed(emb), _trained_cent(emb, rounds), query_filter, k, nprobe)
 
 
-# --- Residual-encoded IVFADC (VERDICT r15 task 2, Jégou §VI complete) --------
+def _ivfadc(
+    base: DataFrame, cent: DataFrame, query_filter: str, k: int, nprobe: int
+) -> DataFrame:
+    """IVFADC search: the strided raw-vector PQ codes live in the inverted
+    lists of ``cent``, and each query ADC-scores only its probed lists."""
+    scored = _cent_scores(base, cent)
+    codes, tables = _strided_pq(base, query_filter)
+    lists = codes.join(
+        _home(scored).withColumnRenamed("vec_id", "neighbor_id"), ["neighbor_id"]
+    )
+    # one broadcast carries (query, probed list, subspace, code, d): the
+    # big side streams codes once, filtered to probed lists by the join
+    probe_tables = _probes(scored, query_filter, nprobe).join(tables, ["query_id"])
+    return _top_k(_adc(lists, probe_tables, ["cent_id", "m", "code"]), k, "adc_dist")
+
+
+def ann_ivfadc_topk(
+    emb: DataFrame, query_filter: str, k: int, nprobe: int = IVF_NPROBE
+) -> DataFrame:
+    """IVF + PQ composed (the IVFADC index structure, Jégou et al. TPAMI
+    2011 §VI, without residual encoding): vectors live in nearest-centroid
+    inverted lists AS PQ CODES; a query probes its ``nprobe`` closest lists
+    and ADC-scores ONLY those lists' codes against its distance table.
+
+    THE production shape for billion-scale ANN — both reductions at once:
+    IVF cuts the candidate set to ~corpus·nprobe/C (an equi-join on
+    cent_id, lists partitioned by centroid), and PQ keeps the scan in the
+    8-byte code domain (scoring = M broadcast-table lookups, no corpus
+    embedding is ever touched at query time).  Residuals are deliberately
+    NOT encoded (codes quantize raw vectors) so the codebook stays the
+    deterministic strided one the DuckDB oracle replicates bit-for-bit; the
+    structure — probe, then compressed-domain score — is exactly
+    IVFADC's."""
+    base = _normed(spread(emb))
+    return _ivfadc(base, _strided_cent(base), query_filter, k, nprobe)
+
+
+def ann_ivfadc_trained_topk(
+    emb: DataFrame,
+    query_filter: str,
+    k: int,
+    nprobe: int = IVF_NPROBE,
+    rounds: int = IVF_TRAIN_ROUNDS,
+) -> DataFrame:
+    """IVFADC over the Lloyd's-TRAINED coarse quantizer: inverted lists come
+    from the trained centroids while vectors stay as the strided raw-vector
+    PQ codes — exactly ``ann_ivfadc_topk``'s compressed-domain search with
+    only the quantizer swapped, so the matrix attributes its recall delta
+    to coarse-quantizer training alone."""
+    emb = spread(emb)
+    return _ivfadc(_normed(emb), _trained_cent(emb, rounds), query_filter, k, nprobe)
+
+
+# --- Residual-encoded IVFADC (Jégou §VI complete) ----------------------------
 
 # Spark-side residual r = x - c(x): zip_with difference in DOUBLE.  No size
 # guard on purpose — zip_with NULL-pads ragged pairs, and the NULL elements
@@ -1244,8 +1199,47 @@ def resid_duck(x: str, c: str) -> str:
     )
 
 
+def _ivfadc_residual(
+    emb: DataFrame, query_filter: str, k: int, nprobe: int
+) -> DataFrame:
+    base = _normed(emb)
+    cent = _strided_cent(base)
+    scored = _cent_scores(base, cent)
+    ce = F.broadcast(cent.select("cent_id", "ce"))
+    # residual of every corpus vector against its HOME centroid: one
+    # broadcast of the (cent_id, ce) table into the assignment join — the
+    # corpus never shuffles beyond the one (vec_id)-keyed assignment row
+    res = (
+        base.join(_home(scored), ["vec_id"])
+        .join(ce, ["cent_id"])
+        .select("vec_id", "cent_id", F.expr(RESID.format(x="embedding", c="ce")).alias("res"))
+    )
+    # residual codebook: the strided PQ seeds' own residuals, j-indexed —
+    # bounded by PQ_CODEBOOK rows, broadcast into both scoring passes
+    cb = _pq_seeds(res, F.col("res").alias("cbe"))
+    codes = _argmin(
+        _pq_table(res, cb, "res", "vec_id", "cent_id"), "vec_id", "cent_id"
+    ).withColumnRenamed("vec_id", "neighbor_id")
+    # query side: one residual PER PROBED LIST, then its own distance table
+    qres = (
+        _probes(scored, query_filter, nprobe)
+        .join(
+            base.filter(F.expr(query_filter)).select(
+                F.col("vec_id").alias("query_id"), "embedding"
+            ),
+            ["query_id"],
+        )
+        .join(ce, ["cent_id"])
+        .select("query_id", "cent_id", F.expr(RESID.format(x="embedding", c="ce")).alias("res"))
+    )
+    tables = _pq_table(qres, cb, "res", "query_id", "cent_id").withColumnRenamed(
+        "j", "code"
+    )
+    return _top_k(_adc(codes, tables, ["cent_id", "m", "code"]), k, "adc_dist")
+
+
 def ann_ivfadc_residual_topk(
-    emb: DataFrame, query_filter: str, k: int, nprobe: int = None
+    emb: DataFrame, query_filter: str, k: int, nprobe: int = IVF_NPROBE
 ) -> DataFrame:
     """IVFADC with RESIDUAL encoding — the accuracy half of Jégou et al.
     TPAMI 2011 §VI that ann_ivfadc_topk deliberately omits: PQ codes
@@ -1262,292 +1256,52 @@ def ann_ivfadc_residual_topk(
     PQ seeds (their own home-centroid offsets), so the DuckDB oracle
     replicates the index bit-for-bit.  Scoring joins codes against the
     broadcast query tables on (cent_id, m, code) — the corpus streams its
-    8-byte codes once, embeddings never move at query time; ranks by
-    (adc_dist ASC NULLS LAST, neighbor_id), the shared PQ contract."""
-    from pulsar_pekko_streams_example_spark.functions.numeric import dsum
-
-    nprobe = IVF_NPROBE if nprobe is None else nprobe
-    emb = spread(emb)
-    base = emb.filter(F.col("embedding").isNotNull()).select(
-        "vec_id", "embedding", F.expr(_norm("embedding")).alias("nrm")
-    )
-    cent = base.filter(
-        (F.col("vec_id") % IVF_CENT_STRIDE) == IVF_CENT_OFFSET
-    ).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    assign = ivf_assignments(emb)
-    # residual of every corpus vector against its HOME centroid: one
-    # broadcast of the (cent_id, ce) table into the assignment join — the
-    # corpus never shuffles beyond the one (vec_id)-keyed assignment row
-    res = (
-        base.join(assign, ["vec_id"])
-        .join(F.broadcast(cent.select("cent_id", "ce")), ["cent_id"])
-        .select(
-            "vec_id",
-            "cent_id",
-            F.expr(RESID.format(x="embedding", c="ce")).alias("res"),
-        )
-    )
-    # residual codebook: the strided PQ seeds' own residuals, j-indexed —
-    # bounded by PQ_CODEBOOK rows, broadcast into both scoring passes
-    cb = res.filter(
-        (F.col("vec_id") < PQ_CENT_STRIDE * PQ_CODEBOOK)
-        & (F.col("vec_id") % PQ_CENT_STRIDE == PQ_CENT_OFFSET)
-    ).select(
-        ((F.col("vec_id") - PQ_CENT_OFFSET) / PQ_CENT_STRIDE)
-        .cast("long")
-        .alias("j"),
-        F.col("res").alias("cbe"),
-    )
-    sub_r = f"slice(res, m * {PQ_SUBDIM} + 1, {PQ_SUBDIM})"
-    sub_c = f"slice(cbe, m * {PQ_SUBDIM} + 1, {PQ_SUBDIM})"
-    d_expr = sqdist(sub_r, sub_c, "spark")
-    guarded = (
-        f"coalesce(nanvl({d_expr}, CAST({PQ_SENTINEL} AS DOUBLE)), "
-        f"CAST({PQ_SENTINEL} AS DOUBLE))"
-    )
-    rdt = (
-        res.crossJoin(F.broadcast(cb))
-        .select(
-            "vec_id",
-            "cent_id",
-            "j",
-            "res",
-            "cbe",
-            F.explode(F.expr(f"sequence(0, {PQ_M - 1})")).alias("m"),
-        )
-        .select(
-            "vec_id",
-            "cent_id",
-            F.col("m").cast("long").alias("m"),
-            "j",
-            F.expr(guarded).alias("d"),
-        )
-    )
-    codes = (
-        rdt.groupBy("vec_id", "cent_id", "m")
-        .agg(F.min(F.struct(F.col("d"), F.col("j"))).alias("mn"))
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            "cent_id",
-            "m",
-            F.col("mn.j").alias("code"),
-        )
-    )
-    # query side: one residual PER PROBED LIST, then its own distance table
-    probes = ivf_probe_ranks(emb, query_filter).filter(
-        F.col("pr") <= nprobe
-    ).select("query_id", "cent_id")
-    qres = (
-        probes.join(
-            base.filter(F.expr(query_filter)).select(
-                F.col("vec_id").alias("query_id"), "embedding"
-            ),
-            ["query_id"],
-        )
-        .join(F.broadcast(cent.select("cent_id", "ce")), ["cent_id"])
-        .select(
-            "query_id",
-            "cent_id",
-            F.expr(RESID.format(x="embedding", c="ce")).alias("res"),
-        )
-    )
-    qdt = (
-        qres.crossJoin(F.broadcast(cb))
-        .select(
-            "query_id",
-            "cent_id",
-            "j",
-            "res",
-            "cbe",
-            F.explode(F.expr(f"sequence(0, {PQ_M - 1})")).alias("m"),
-        )
-        .select(
-            "query_id",
-            "cent_id",
-            F.col("m").cast("long").alias("m"),
-            F.col("j").alias("code"),
-            F.expr(guarded).alias("d"),
-        )
-    )
-    scored = (
-        codes.join(F.broadcast(qdt), ["cent_id", "m", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(dsum("d").alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc_nulls_last(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "adc_dist", "rnk")
-    )
+    8-byte codes once, embeddings never move at query time."""
+    return _ivfadc_residual(spread(emb), query_filter, k, nprobe)
 
 
-def ann_ivfadc_trained_topk(
-    emb: DataFrame,
-    query_filter: str,
-    k: int,
-    nprobe: int = None,
-    rounds: int = IVF_TRAIN_ROUNDS,
+def ann_ivfadc_residual_refine_topk(
+    emb: DataFrame, query_filter: str, k: int, r: int, nprobe: int = IVF_NPROBE
 ) -> DataFrame:
-    """IVFADC composed over the Lloyd's-TRAINED coarse quantizer (VERDICT
-    r15 task 1's composition half): inverted lists come from
-    ``trained_ivf_centroids`` while vectors stay as the strided raw-vector
-    PQ codes — exactly ``ann_ivfadc_topk``'s compressed-domain search with
-    only the quantizer swapped, so the matrix attributes its recall delta
-    to coarse-quantizer training alone.  Same scale shape: broadcast
-    centroid scoring for assignment/probing, codes stream once through the
-    (cent_id, m, code) equi-join, embeddings never move at query time."""
-    from pulsar_pekko_streams_example_spark.functions.numeric import dsum
-
-    nprobe = IVF_NPROBE if nprobe is None else nprobe
-    emb = spread(emb)
-    base = emb.filter(F.col("embedding").isNotNull()).select(
-        "vec_id", "embedding", F.expr(_norm("embedding")).alias("nrm")
-    )
-    cent = trained_ivf_centroids(emb, rounds).select(
-        # coalesce to the unreachable -1: cluster_id is the training
-        # argmax pick, and a nullable key here lets a downstream equi-join
-        # push isnotnull(<whole assign fold>) INTO the training crossJoin,
-        # re-evaluating the fold per row as a join residual (the
-        # dup_span_coverage lesson; plan-audited).  Oracle twins carry the
-        # same coalesce in lockstep.
-        F.coalesce(F.col("cluster_id"), F.lit(-1)).alias("cent_id"),
-        F.col("centroid").alias("ce"),
-        F.expr(_norm("centroid")).alias("cn"),
-    )
-    scored = base.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "cent_id",
-        F.expr(
-            safe_cos(DOT.format(a="embedding", b="ce"), "nrm * cn", "spark")
-        ).alias("csim"),
-    )
-    assign = (
-        scored.groupBy("vec_id")
-        .agg(
-            F.max(
-                F.struct(F.col("csim").alias("csim"), (-F.col("cent_id")).alias("neg"))
-            ).alias("m")
-        )
-        .select(
-            F.col("vec_id").alias("neighbor_id"), (-F.col("m.neg")).alias("cent_id")
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("csim").desc(), F.col("cent_id"))
-    probes = (
-        scored.filter(F.expr(query_filter))
-        .select(F.col("vec_id").alias("query_id"), "cent_id", "csim")
-        .withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", "cent_id")
-    )
-    codes = pq_codes(pq_distance_table(emb))
-    coded_lists = codes.withColumnRenamed("vec_id", "neighbor_id").join(
-        assign, ["neighbor_id"]
-    )
-    qdt = pq_distance_table(emb, row_filter=query_filter).select(
-        F.col("vec_id").alias("query_id"),
-        "m",
-        F.col("j").alias("code"),
-        "d",
-    )
-    probe_tables = probes.join(qdt, ["query_id"])
-    adc = (
-        coded_lists.join(F.broadcast(probe_tables), ["cent_id", "m", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(dsum("d").alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc_nulls_last(), F.col("neighbor_id")
-    )
-    return (
-        adc.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "adc_dist", "rnk")
-    )
+    """The COMPLETE IVFADC+R pipeline (Jégou et al. TPAMI 2011 §V + §VI):
+    residual-encoded IVFADC shortlists ``r`` candidates per query in the
+    compressed domain, then ONLY those r rejoin their full embeddings for
+    an exact-cosine re-rank to the final top-``k`` (``_rerank``) — the
+    structure a billion-scale deployment ships (coarse prune + residual
+    codes + cheap re-rank).  Refined recall@k >= residual-ADC recall@k —
+    pinned."""
+    short = _ivfadc_residual(spread(emb), query_filter, r, nprobe)
+    return _rerank(short, _normed(emb), query_filter, k)
 
 
-# --- Trained PQ codebooks (round-16: the PQ half of quantizer training) ------
+# --- Trained PQ codebooks (the PQ half of quantizer training) ----------------
 
 PQ_TRAIN_ROUNDS = 2
 
 
-def _pq_dt_from_cb(
-    base: DataFrame, cb: DataFrame, row_filter: str | None = None
-) -> DataFrame:
-    """(vec_id, m, j, d): guarded squared-L2 of every vector's m-th
-    subvector against an EXPLICIT (m, j, cbe) codebook frame (M x K rows,
-    broadcast).  The trained-codebook twin of pq_distance_table — same
-    sentinel contract, same one-map-pass shape."""
-    if row_filter is not None:
-        base = base.filter(F.expr(row_filter))
-    d = sqdist(f"slice(embedding, m * {PQ_SUBDIM} + 1, {PQ_SUBDIM})", "cbe", "spark")
-    guarded = (
-        f"coalesce(nanvl({d}, CAST({PQ_SENTINEL} AS DOUBLE)), "
-        f"CAST({PQ_SENTINEL} AS DOUBLE))"
-    )
-    return base.crossJoin(F.broadcast(cb)).select(
-        "vec_id", "m", "j", F.expr(guarded).alias("d")
-    )
-
-
-def trained_pq_codebook(
-    emb: DataFrame, rounds: int = PQ_TRAIN_ROUNDS
-) -> DataFrame:
+def _trained_pq_codebook(base: DataFrame, rounds: int) -> DataFrame:
     """(m, j, cbe): per-subspace Lloyd's-trained PQ codebook, seeded from
     the strided codebook's subvectors.  Each round is one guarded-L2
-    assignment (the pq_codes argmin, corpus x M x K broadcast scoring) plus
+    assignment (the ``_argmin`` of a corpus x M x K broadcast scoring) plus
     one exact-decimal mean update — the shuffle carries M x K x subdim
     aggregated rows, never subvectors.  Entries that lose every member
     drop out, deterministically in both engines; a NaN/huge component is
     excluded from the mean but still counted (the dsum contract)."""
-    from pulsar_pekko_streams_example_spark.functions.numeric import dsum
-
-    emb = spread(emb)
-    base = emb.filter(F.col("embedding").isNotNull()).select("vec_id", "embedding")
-    cb = (
-        base.filter(
-            (F.col("vec_id") < PQ_CENT_STRIDE * PQ_CODEBOOK)
-            & (F.col("vec_id") % PQ_CENT_STRIDE == PQ_CENT_OFFSET)
-        )
-        .select(
-            ((F.col("vec_id") - PQ_CENT_OFFSET) / PQ_CENT_STRIDE)
-            .cast("long")
-            .alias("j"),
-            F.explode(F.expr(f"sequence(0, {PQ_M - 1})")).alias("m0"),
-            "embedding",
-        )
-        .select(
-            F.col("m0").cast("long").alias("m"),
-            "j",
-            F.expr(f"slice(embedding, m0 * {PQ_SUBDIM} + 1, {PQ_SUBDIM})").alias(
-                "cbe"
-            ),
-        )
+    cb = _pq_seeds(
+        base, F.explode(F.expr(f"sequence(0, {PQ_M - 1})")).alias("m0"), "embedding"
+    ).select(
+        F.col("m0").cast("long").alias("m"),
+        "j",
+        F.expr(_sub("embedding", "m0")).alias("cbe"),
     )
     for _ in range(rounds):
-        codes = (
-            _pq_dt_from_cb(base, cb)
-            .groupBy("vec_id", "m")
-            .agg(F.min(F.struct(F.col("d"), F.col("j"))).alias("mn"))
-            .select("vec_id", "m", F.col("mn.j").alias("code"))
-        )
+        codes = _argmin(_pq_sub_table(base, cb), "vec_id")
         upd = (
             codes.join(base, ["vec_id"])
             .select(
                 "m",
                 "code",
-                F.posexplode(
-                    F.expr(f"slice(embedding, m * {PQ_SUBDIM} + 1, {PQ_SUBDIM})")
-                ).alias("sd0", "comp"),
+                F.posexplode(F.expr(_sub("embedding"))).alias("sd0", "comp"),
             )
             .groupBy("m", "code", (F.col("sd0") + 1).cast("long").alias("sd"))
             .agg(
@@ -1579,86 +1333,76 @@ def ann_pq_trained_topk(
     broadcast query tables, (m, code) equi-join scoring), only the codebook
     differs — so ann_method_recall_matrix's pq_trained row attributes its
     recall delta to codebook training alone."""
-    from pulsar_pekko_streams_example_spark.functions.numeric import dsum
-
-    emb = spread(emb)
-    base = emb.filter(F.col("embedding").isNotNull()).select("vec_id", "embedding")
-    cb = trained_pq_codebook(emb, rounds)
-    dt = _pq_dt_from_cb(base, cb)
-    codes = (
-        dt.groupBy("vec_id", "m")
-        .agg(F.min(F.struct(F.col("d"), F.col("j"))).alias("mn"))
-        .select(
-            F.col("vec_id").alias("neighbor_id"), "m", F.col("mn.j").alias("code")
-        )
-    )
-    qdt = _pq_dt_from_cb(base, cb, row_filter=query_filter).select(
-        F.col("vec_id").alias("query_id"),
-        "m",
-        F.col("j").alias("code"),
-        "d",
-    )
-    scored = (
-        codes.join(F.broadcast(qdt), ["m", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(dsum("d").alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc_nulls_last(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "adc_dist", "rnk")
-    )
+    base = _normed(spread(emb))
+    cb = _trained_pq_codebook(base, rounds)
+    codes, tables = _pq_encode(base, lambda rows: _pq_sub_table(rows, cb), query_filter)
+    return _top_k(_adc(codes, tables, ["m", "code"]), k, "adc_dist")
 
 
-def ann_ivfadc_residual_refine_topk(
-    emb: DataFrame, query_filter: str, k: int, r: int, nprobe: int = None
+# --- IVF recall ledgers -----------------------------------------------------
+
+
+def _recall_curve(
+    emb: DataFrame,
+    base: DataFrame,
+    cent: DataFrame,
+    query_filter: str,
+    k: int,
+    max_probes: int,
 ) -> DataFrame:
-    """The COMPLETE IVFADC+R pipeline (Jégou et al. TPAMI 2011 §V + §VI):
-    residual-encoded IVFADC shortlists ``r`` candidates per query in the
-    compressed domain, then ONLY those r rejoin their full embeddings for
-    an exact-cosine re-rank to the final top-``k`` — the exact structure a
-    billion-scale deployment ships (coarse prune + residual codes + cheap
-    re-rank).  Any true top-k neighbor that survives the shortlist is
-    guaranteed into the refined top-k, so refined recall@k >= residual-ADC
-    recall@k — pinned.  Refine cost is queries x r full vectors, never a
-    second corpus-scan shape; cosine is the shared safe_cos total
-    contract (coalesced to -1, the ann_pq_refine_topk posture)."""
-    short = ann_ivfadc_residual_topk(emb, query_filter, r, nprobe).select(
-        "query_id", "neighbor_id"
+    """(nprobe, exact_pairs, found, missed, recall_micro) for nprobe in
+    1..max_probes: exact cosine top-k pairs LEFT JOIN the probe rank of each
+    neighbor's home centroid in ``cent``.  An exact neighbor is reachable at
+    nprobe p iff that rank is <= p, so ONE rank column yields the whole
+    tuning curve — no per-nprobe re-search."""
+    exact = _cosine_topk(emb, query_filter, k).select("query_id", "neighbor_id")
+    scored = _cent_scores(base, cent)
+    assign = _home(scored).withColumnRenamed("vec_id", "neighbor_id")
+    # assign is CORPUS-sized (one row per vector) — never a broadcast side
+    # (broadcasting it ships the whole corpus's assignments to every
+    # executor).  The exact side is queries x k; a neighbor_id-keyed shuffle
+    # join streams assignments once.  The probe ranks stay broadcast: they
+    # are |queries| x |centroids|, the bounded probe table.
+    hit = exact.join(assign, ["neighbor_id"], "left").join(
+        F.broadcast(_probe_ranks(scored, query_filter)), ["query_id", "cent_id"], "left"
     )
-    base = emb.filter(F.col("embedding").isNotNull()).select(
-        "vec_id", "embedding", F.expr(_norm("embedding")).alias("nrm")
+    tot = hit.agg(F.count(F.lit(1)).cast("long").alias("exact_pairs"))
+    grid = emb.sparkSession.range(1, max_probes + 1).select(F.col("id").alias("nprobe"))
+    # rank HISTOGRAM before the grid join: the broadcast side is bounded by
+    # |centroids| rows (not |queries| x k pairs), so the inequality join
+    # stays trivial at any corpus size
+    prh = hit.groupBy("pr").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    per = (
+        grid.join(F.broadcast(prh), F.col("pr") <= F.col("nprobe"), "left")
+        .groupBy("nprobe")
+        .agg(F.coalesce(F.sum("cnt"), F.lit(0)).cast("long").alias("found"))
     )
-    q = base.filter(F.expr(query_filter)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
+    return per.crossJoin(F.broadcast(tot)).select(
+        "nprobe",
+        "exact_pairs",
+        "found",
+        (F.col("exact_pairs") - F.col("found")).cast("long").alias("missed"),
+        F.expr(
+            "CAST(CASE WHEN exact_pairs > 0 "
+            "THEN 1000000 * found div exact_pairs ELSE 0 END AS BIGINT)"
+        ).alias("recall_micro"),
     )
-    n = base.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ne"),
-        F.col("nrm").alias("nn"),
-    )
-    rescored = (
-        short.join(n, ["neighbor_id"])
-        .join(F.broadcast(q), ["query_id"])
-        .withColumn(
-            "cosine",
-            F.coalesce(
-                F.expr(safe_cos(DOT.format(a="qe", b="ne"), "qn * nn", "spark")),
-                F.lit(-1.0),
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
+
+
+def ivf_recall_curve(
+    emb: DataFrame, query_filter: str, k: int, max_probes: int
+) -> DataFrame:
+    """The strided quantizer's recall@k tuning curve (``_recall_curve``)."""
+    emb = spread(emb)
+    base = _normed(emb)
+    return _recall_curve(emb, base, _strided_cent(base), query_filter, k, max_probes)
+
+
+def ivf_trained_recall_curve(
+    emb: DataFrame, query_filter: str, k: int, max_probes: int
+) -> DataFrame:
+    """The Lloyd's-trained quantizer's recall@k tuning curve."""
+    emb = spread(emb)
+    return _recall_curve(
+        emb, _normed(emb), _trained_cent(emb, IVF_TRAIN_ROUNDS), query_filter, k, max_probes
     )

@@ -32,6 +32,18 @@ def test_every_registry_query_has_an_oracle(capsys):
     assert all(spec.oracle is not None for spec in REGISTRY.values())
 
 
+def test_explain_prints_the_query_doc_above_the_plan(spark, capsys):
+    from pulsar_pekko_streams_example_spark.plans.registry import REGISTRY
+
+    from tests.conftest import SF_SMOKE
+
+    assert main(["explain", "status_counts", "--sf-dir", SF_SMOKE]) == 0
+    out = " ".join(capsys.readouterr().out.split())
+    doc = " ".join(REGISTRY["status_counts"].doc.split())
+    assert doc and doc in out, out[:500]
+    assert out.index(doc) < out.index("== Physical Plan ==")
+
+
 def test_unknown_query_rejected():
     with pytest.raises(SystemExit):
         main(["run", "no_such_query"])

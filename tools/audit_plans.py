@@ -113,7 +113,7 @@ rounds' corpus x <=MxK-broadcast-codebook scoring passes — the
 pq_distance_table shape recorded under ann_pq_adc_topk, re-run per round —
 plus the final codes/query-table pass against the trained codebook; the
 update step is a (m, code, subdim)-keyed hash aggregate, never a join,
-operators/similarity.py::trained_pq_codebook); ann_method_recall_matrix
+operators/similarity.py::_trained_pq_codebook); ann_method_recall_matrix
 (45 passes = the adjudicated sum of its NINE constituent index paths —
 ivfadc_residual's 6, ivfadc_trained's 8, pq_trained's 6 included — plus
 one exact-ground-truth crossJoin per UNION branch; every pass is a
